@@ -8,8 +8,6 @@ these run per-row on every event ingested.
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -115,14 +113,3 @@ def truncate_columns(df: DataFrame, max_lengths: dict[str, int]) -> DataFrame:
         else:
             cols.append(F.col(f.name))
     return df.select(*cols)
-
-
-def any_nonnull_max(cols: Iterable[str]) -> list[Column]:
-    """`MAX(col)` value-picker list for GROUP BY enrichment.
-
-    Reference F11/A2 uses lexicographic MAX over strings as the
-    "any/latest value" picker (import_flow_events.py:166-168,223-231).
-    Kept deliberately lexicographic — do not "improve" to last-by-time
-    (SURVEY §7 trap 3).
-    """
-    return [F.max(c).alias(c) for c in cols]

@@ -22,6 +22,8 @@ so every operator here has an exact SQL oracle.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -308,12 +310,8 @@ def simhash(
 # never data): constructing the ~11 packed 3-lane folds plus the
 # 32-bit majority extraction costs ~0.9 s of py4j round-trips per
 # call — most of the query's Python-side build phase.
-_SIMHASH_EXPRS: dict[int, tuple] = {}
-
-
+@functools.cache
 def _simhash_exprs(bits: int):
-    if bits in _SIMHASH_EXPRS:
-        return _SIMHASH_EXPRS[bits]
     zero = F.lit(0).cast("long")
     _LANE = 20  # bits per packed count lane (3 lanes < 63 bits)
     hcol = F.col("_hs")
@@ -355,8 +353,7 @@ def _simhash_exprs(bits: int):
                 cnt * 2 > F.col("_n"), F.lit(1 << b).cast("long")
             ).otherwise(zero)
     sig = F.when(F.col("_isnull"), F.lit(None).cast("long")).otherwise(sig)
-    _SIMHASH_EXPRS[bits] = (n_expr, pk_expr, hcol.isNull(), sig)
-    return _SIMHASH_EXPRS[bits]
+    return n_expr, pk_expr, hcol.isNull(), sig
 
 
 def duplicate_clusters(

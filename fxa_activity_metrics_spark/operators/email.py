@@ -9,12 +9,6 @@ binding for clarity.
 
 from __future__ import annotations
 
-import datetime as dt
-
-from pyspark.sql import DataFrame
-
-from fxa_activity_metrics_spark.operators.activity import typed_day_events
-
 EMAIL_COLUMNS = [
     "timestamp",
     "flow_id",
@@ -25,19 +19,3 @@ EMAIL_COLUMNS = [
     "complaint",
     "locale",
 ]
-
-
-def typed_email_day(
-    raw: DataFrame,
-    day: dt.date | str,
-    percent: int,
-    retention_cutoff: dt.date | str | None = None,
-) -> DataFrame:
-    return typed_day_events(
-        raw,
-        day,
-        id_column="flow_id",
-        percent=percent,
-        retention_cutoff=retention_cutoff,
-        columns=EMAIL_COLUMNS,
-    )

@@ -238,37 +238,3 @@ def experiments_grace_frame(grace_events: DataFrame) -> DataFrame:
     return grace_events.filter(
         (t != "flow.begin") & ~t.startswith("flow.continued.")
     )
-
-
-def build_flow_metadata_for_day(
-    staging_day: DataFrame,
-    staging_grace: DataFrame,
-    day: dt.date | str,
-    backfill: bool | None = None,
-    backfill_staging: DataFrame | None = None,
-) -> DataFrame:
-    """Full enrichment chain for one day, in the reference's hook
-    order (import_flow_events.py:322-355): begin → duration/locale/uid
-    → completed → new_account → [context backfill] → continued_from.
-
-    ``staging_day``: typed staging rows of ``day``;
-    ``staging_grace``: rows of day ∪ day+1 (the 1-day grace window,
-    with day+1 already control-event-consumed);
-    ``backfill_staging``: the full-column staging frame for the
-    pre-cutoff context backfill (defaults to ``staging_day``, which is
-    the temp table the reference reads there).
-    """
-    d = dt.date.fromisoformat(str(day))
-    if backfill is None:
-        backfill = d < BACKFILL_CUTOFF
-    grace_meta = metadata_grace_frame(staging_grace)
-    meta = begin_sessions(staging_day, d)
-    meta = enrich_duration_locale_uid(meta, grace_meta)
-    meta = mark_flag(meta, grace_meta, "flow.complete", "completed")
-    meta = mark_flag(meta, grace_meta, "account.created", "new_account")
-    if backfill:
-        meta = backfill_context(
-            meta, backfill_staging if backfill_staging is not None else staging_day
-        )
-    meta = set_continued_from(meta, staging_grace)
-    return meta

@@ -97,6 +97,21 @@ def _micro_ln(x: F.Column) -> F.Column:
     return F.round(F.log(x.cast("double")) * 1e6).cast("bigint")
 
 
+def _avg_6dp(total_micro: F.Column, n: F.Column) -> F.Column:
+    """round(total_micro / 1e6 / n, 6) exactly as the DuckDB oracle
+    rounds it: the quotient in binary64, then quotient·1e6 rounded
+    half away from zero to an integer and scaled back. Spark's
+    round(x, 6) instead rounds the shortest decimal string of x, which
+    on an exact half-tie can sit just inside the half and round toward
+    zero: −81 657 012 µnats over 24 grams is −3.4023755, and round()
+    gives −3.402375 where the oracle gives −3.402376. Rounding the
+    same binary64 product makes the two engines agree on every input,
+    ties included. (Exact decimal HALF_UP would not: the oracle's own
+    binary64 quotient lands below the half on some true ties.)"""
+    x = total_micro.cast("double") / 1e6 / n.cast("double")
+    return F.round(x * 1e6, 0) / 1e6
+
+
 def lm_score(
     corpus: DataFrame,
     model_corpus: DataFrame | None = None,
@@ -163,9 +178,7 @@ def lm_score_with_counts(
     return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_bigrams"),
         F.sum("lp").alias("logprob_micro"),
-        F.round(
-            F.sum("lp").cast("double") / 1e6 / F.count(F.lit(1)).cast("double"), 6
-        ).alias("avg_logprob"),
+        _avg_6dp(F.sum("lp"), F.count(F.lit(1))).alias("avg_logprob"),
     )
 
 
@@ -358,9 +371,7 @@ def lm_score_ngram(
     return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_grams"),
         F.sum("lp").alias("logprob_micro"),
-        F.round(
-            F.sum("lp").cast("double") / 1e6 / F.count(F.lit(1)).cast("double"), 6
-        ).alias("avg_logprob"),
+        _avg_6dp(F.sum("lp"), F.count(F.lit(1))).alias("avg_logprob"),
     )
 
 
@@ -487,9 +498,7 @@ def lm_score_backoff(
     return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_grams"),
         F.sum("lp").alias("score_micro"),
-        F.round(
-            F.sum("lp").cast("double") / 1e6 / F.count(F.lit(1)).cast("double"), 6
-        ).alias("avg_score"),
+        _avg_6dp(F.sum("lp"), F.count(F.lit(1))).alias("avg_score"),
     )
 
 

@@ -1,30 +1,40 @@
 """Embedding similarity search (ANN) over array<float> columns.
 
-Two paths, per the scale contract:
+Every top-k path is a candidate generator in front of one exact
+rerank: prune with an index, then verify exactly. Candidates come
+from, per path:
 
-- brute_force_topk: exact cosine top-k. The query side is broadcast;
-  the corpus is scanned once, partition-parallel, with the dot
-  product computed JVM-side via zip_with + aggregate (sequential
-  fold → bit-reproducible against the DuckDB oracle). Cost
-  O(|corpus| × |queries| × dim) FLOPs but zero shuffle of the corpus;
-  correct baseline and fine for small query batches.
+- ``brute_force_topk``: a broadcast join of every (query, corpus)
+  pair; ``hard_negatives`` adds its label predicate to that join;
+- ``brute_force_topk_gemm``: a per-partition numpy GEMM that keeps
+  each partition's local top-k;
+- ``lsh_topk``: a random-hyperplane bucket join with one-bit
+  multiprobe;
+- ``jl_topk``: a JL sign-bucket join with Hamming multiprobe;
+- ``ivf_topk`` / ``ivf_query_index``: the IVF cell probe;
+- ``pq_topk`` / ``pq_query_index`` and ``ivfpq_topk`` /
+  ``ivfpq_query_index``: the PQ ADC shortlist, IVFPQ behind the cell
+  probe.
 
-- lsh_topk: random-hyperplane LSH. Each vector gets an n-bit bucket
-  (sign of dot with n deterministic hyperplanes); top-k runs within
-  matching buckets only. Shuffle is on bucket keys; recall < 1.0 —
-  multi-probe (flipping each bit) trades cost for recall. The 100 TB
-  path: corpus bucketing is a one-pass map, candidates per query drop
-  by ~2^n.
+The rerank is shared. ``_exact_topk`` scores candidates with the
+sequential-fold cosine (JVM-side zip_with + aggregate, bit-reproducible
+against the DuckDB oracle) rounded to 6dp, and ``_rank_topk`` keeps
+each query's k best by (cosine desc, neighbor_id asc). Ranking on the
+rounded value makes every path hash-comparable against the same
+oracle, whatever order its scorer summed in. The GEMM path ranks its
+own rounded scores through ``_rank_topk``; the PQ paths reach
+``_exact_topk`` through ``_adc_rerank``.
 
-Hyperplane components are deterministic ±1 derived from md5, so runs
-are reproducible across sessions and engines with no stored model.
+Hyperplanes, centroids, codebooks and JL signs are deterministic md5
+derivations, so runs are reproducible across sessions and engines
+with no stored model.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import math
-from collections import OrderedDict
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -70,6 +80,52 @@ def cosine(a: F.Column, b: F.Column) -> F.Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _rank_topk(scored: DataFrame, k: int, extra: tuple[str, ...] = ()) -> DataFrame:
+    """Keep each query's k best rows of ``scored`` (query_id,
+    neighbor_id, *extra, cos): rank 1..k by cos desc, neighbor_id asc.
+    ``cos`` must already be rounded to 6dp."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cos").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", *extra, "rank", F.col("cos").alias("cosine"))
+    )
+
+
+def _exact_topk(cand: DataFrame, k: int, extra: tuple[str, ...] = ()) -> DataFrame:
+    """Exact rerank of a candidate join carrying query_id, neighbor_id,
+    q_vec/q_nrm and c_vec/c_nrm. Norms are projected once per ROW on
+    each side, below the join, so the per-PAIR expression is one dot
+    fold and a divide (cosine() inline would re-fold both norms per
+    pair)."""
+    return _rank_topk(
+        cand.select(
+            "query_id",
+            "neighbor_id",
+            *extra,
+            F.round(
+                dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_nrm") * F.col("c_nrm")), 6
+            ).alias("cos"),
+        ),
+        k,
+        extra,
+    )
+
+
+def _query_batch(queries: DataFrame, id_col: str, vec_col: str):
+    """ONE Arrow pull of the bounded query batch (the ANN entries'
+    standing assumption): (ids, float64 matrix). Probe cells, the PQ
+    LUT and the rerank side are all computed from it, so a query path
+    pays one driver round-trip instead of a Spark job per consumer."""
+    return _pull_matrix(
+        queries.select(F.col(id_col), _as_double(F.col(vec_col)).alias(vec_col)),
+        id_col,
+        vec_col,
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -81,36 +137,17 @@ def brute_force_topk(
 
     Output: (query_id, neighbor_id, rank, cosine) — rank 1..k by
     cosine ROUNDED TO 6DP desc, ties broken by neighbor_id asc;
-    self-matches excluded. Ranking on the rounded value makes the
-    ordering independent of summation order (fold vs GEMM vs SQL
-    engines differ in the last ulps), so every exact-top-k variant
-    is hash-comparable against the same oracle. The broadcast hint
-    keeps the corpus un-shuffled.
+    self-matches excluded. The broadcast hint keeps the corpus
+    un-shuffled.
     """
-    # Norms are projected once per ROW on each side, below the join —
-    # the per-PAIR expression is one dot + a divide (1 array fold, not
-    # 3: cosine() inline would re-fold both norms per pair). Same
-    # arithmetic in the same order, so results are bitwise identical.
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("c_vec")
     ).withColumn("c_nrm", norm(F.col("c_vec")))
     q = queries.select(
         F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("q_vec")
     ).withColumn("q_nrm", norm(F.col("q_vec")))
-    scored = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")).select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_nrm") * F.col("c_nrm")), 6
-        ).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.col("cos").alias("cosine"))
+    return _exact_topk(
+        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")), k
     )
 
 
@@ -137,9 +174,8 @@ def brute_force_topk_gemm(
     probe set is small — same contract as ivf_centroids); the corpus
     never leaves the executors. Summation order inside GEMM differs
     from the sequential fold in the last ulps, so scores are rounded
-    to 6dp BEFORE any ranking (locally and globally, ties broken by
-    neighbor_id asc) — the same rule as brute_force_topk, which makes
-    this path hash-comparable against the same SQL oracle.
+    to 6dp BEFORE the local ranking too, and the global pass is
+    ``_rank_topk`` — hash-comparable against the same SQL oracle.
     """
     import numpy as np  # baked into the runtime alongside pyarrow
     import pandas as pd
@@ -180,16 +216,7 @@ def brute_force_topk_gemm(
             if parts:
                 yield pd.concat(parts, ignore_index=True)
 
-    scored = corpus.select(id_col, vec_col).mapInPandas(score, out_schema)
-    # cos is already 6dp-rounded by the local pass
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.col("cos").alias("cosine"))
-    )
+    return _rank_topk(corpus.select(id_col, vec_col).mapInPandas(score, out_schema), k)
 
 
 def hyperplanes(dim: int, n_planes: int, seed: str = "fxa-lsh") -> list[list[float]]:
@@ -203,28 +230,6 @@ def hyperplanes(dim: int, n_planes: int, seed: str = "fxa-lsh") -> list[list[flo
             row.append(1.0 if int(digest[:2], 16) % 2 == 0 else -1.0)
         planes.append(row)
     return planes
-
-
-# Hoisted LSH bucket expression trees, keyed by (vec_col, planes) —
-# the same CODE-memoization as the JL/simhash hoists: F.lit of a
-# nested plane list expands to one py4j literal call PER FLOAT
-# (~64·n_planes round-trips), so constructing the fold cost ~1-2 s of
-# every embedding_neardup_lsh / ann_lsh / ann_filtered call (measured
-# with cProfile: 5.7-7.7k socket round-trips per build, 0.8-1.2k of
-# them lit()). Planes are deterministic functions of (dim, n_planes,
-# seed) — pure parameters, never data — and Column objects are
-# immutable unresolved trees over the fixed ``vec_col`` name, so one
-# construction serves every later DataFrame.
-#
-# Bounded (ADVICE r14): the key embeds the full plane matrix (exact —
-# a digest key could alias two distinct matrices onto one expression
-# tree), so the memo is a small LRU rather than an unbounded dict:
-# distinct (dim, n_planes, seed) combinations stop retaining their
-# large key tuples + py4j Column trees forever. The working set here
-# is a handful of fixed parameterizations per process; 16 slots keeps
-# every hot entry resident while capping retention.
-_BUCKET_EXPRS: "OrderedDict[tuple, object]" = OrderedDict()
-_BUCKET_EXPRS_CAP = 16
 
 
 def bucket_ids(
@@ -241,34 +246,49 @@ def bucket_ids(
     ``vec_col`` must already be array<double> (every caller projects
     the cast once per row): a cast HERE would sit inside the plane
     lambda and re-materialize the array once per plane per row."""
-    key = (vec_col, tuple(tuple(p) for p in planes))
-    if key not in _BUCKET_EXPRS:
-        planes_lit = F.lit([list(p) for p in planes])
-        v = F.col(vec_col)
-        zero = F.lit(0).cast("long")
-        bucket = F.aggregate(
-            F.transform(
-                planes_lit,
-                lambda p, i: F.when(
-                    dot(v, p) > 0,
-                    F.pow(F.lit(2.0), i.cast("double")).cast("long"),
-                ).otherwise(zero),
-            ),
-            zero,
-            lambda acc, b: acc + b,
-        )
-        # coalesce forces the column NON-NULLABLE (the fold never
-        # yields null, but aggregate() reports nullable) so a
-        # downstream join's inferred isnotnull(bucket) folds away
-        # instead of being pushed to the scan with the whole
-        # plane-fold substituted — which would compute every bucket
-        # twice (the pushdown-duplication trap).
-        while len(_BUCKET_EXPRS) >= _BUCKET_EXPRS_CAP:
-            _BUCKET_EXPRS.popitem(last=False)
-        _BUCKET_EXPRS[key] = F.coalesce(bucket, zero)
-    else:
-        _BUCKET_EXPRS.move_to_end(key)
-    return df.withColumn(out_col, _BUCKET_EXPRS[key])
+    return df.withColumn(out_col, _bucket_expr(vec_col, tuple(tuple(p) for p in planes)))
+
+
+# Hoisted LSH bucket expression trees — the same CODE-memoization as
+# the JL/simhash hoists: F.lit of a nested plane list expands to one
+# py4j literal call PER FLOAT (~64·n_planes round-trips), so
+# constructing the fold cost ~1-2 s of every embedding_neardup_lsh /
+# ann_lsh / ann_filtered call (measured with cProfile: 5.7-7.7k socket
+# round-trips per build, 0.8-1.2k of them lit()). Planes are
+# deterministic functions of (dim, n_planes, seed) — pure parameters,
+# never data — and Column objects are immutable unresolved trees over
+# the fixed ``vec_col`` name, so one construction serves every later
+# DataFrame.
+#
+# Bounded (ADVICE r14): the key embeds the full plane matrix (exact —
+# a digest key could alias two distinct matrices onto one expression
+# tree), so the memo is a small LRU rather than an unbounded cache.
+# The working set is a handful of fixed parameterizations per process;
+# 16 slots keeps every hot entry resident while capping retention.
+# lru_cache keeps lookup and eviction consistent across foreachBatch
+# threads.
+@functools.lru_cache(maxsize=16)
+def _bucket_expr(vec_col: str, planes: tuple[tuple[float, ...], ...]) -> F.Column:
+    planes_lit = F.lit([list(p) for p in planes])
+    v = F.col(vec_col)
+    zero = F.lit(0).cast("long")
+    bucket = F.aggregate(
+        F.transform(
+            planes_lit,
+            lambda p, i: F.when(
+                dot(v, p) > 0,
+                F.pow(F.lit(2.0), i.cast("double")).cast("long"),
+            ).otherwise(zero),
+        ),
+        zero,
+        lambda acc, b: acc + b,
+    )
+    # coalesce forces the column NON-NULLABLE (the fold never yields
+    # null, but aggregate() reports nullable) so a downstream join's
+    # inferred isnotnull(bucket) folds away instead of being pushed to
+    # the scan with the whole plane-fold substituted — which would
+    # compute every bucket twice (the pushdown-duplication trap).
+    return F.coalesce(bucket, zero)
 
 
 def embedding_neardup_pairs(
@@ -522,17 +542,6 @@ def embedding_neardup_pairs_blocked(
     )
 
 
-def l2sq(a: F.Column, b) -> F.Column:
-    """Squared L2 distance via the same sequential zip_with/aggregate
-    fold as ``dot`` — bit-reproducible against the DuckDB oracle's
-    list_sum over the identical per-element terms."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def pq_codebooks(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -700,6 +709,85 @@ def _pq_lut_from(session, qids, qmat, codebooks) -> DataFrame:
     )
 
 
+def _adc_rerank(
+    codes: DataFrame,
+    base: DataFrame,
+    codebooks: list[list[list[float]]],
+    qids,
+    qmat,
+    k: int,
+    shortlist_factor: int,
+) -> DataFrame:
+    """The PQ back half shared by the in-session and persisted PQ and
+    IVFPQ paths: each query's asymmetric distance is m LUT lookups
+    summed in INTEGER micro-units (order-free, engine-exact — a float
+    sum of the parts would diverge by ulps between engines and flip
+    near-tie shortlist cuts), the ``shortlist_factor × k`` nearest
+    survive, and ``_exact_topk`` reranks them against ``base`` (id,
+    vec, nrm) with the pulled query batch (qids, qmat) as its query
+    side.
+
+    ``codes`` is the (id, s, code) stream, or a cell-probed IVFPQ
+    stream that already carries query_id, which then keys the LUT
+    join too. Both the LUT and the query side are broadcast, so the
+    code stream never shuffles until the (query, id) aggregate."""
+    session = codes.sparkSession
+    lut = _pq_lut_from(session, qids, qmat, codebooks)
+    on = [c for c in ("query_id", "s", "code") if c in codes.columns]
+    adist = (
+        codes.join(F.broadcast(lut), on)
+        .filter(F.col("id") != F.col("query_id"))
+        .groupBy("query_id", "id")
+        .agg(F.sum("part_micro").alias("adist_micro"))
+    )
+    wl = Window.partitionBy("query_id").orderBy(
+        F.col("adist_micro").asc(), F.col("id").asc()
+    )
+    short = (
+        adist.withColumn("_r", F.row_number().over(wl))
+        .filter(F.col("_r") <= shortlist_factor * k)
+        .select("query_id", "id")
+    )
+    qbase = session.createDataFrame(
+        [(int(qi), [float(x) for x in qv]) for qi, qv in zip(qids, qmat)],
+        "query_id long, q_vec array<double>",
+    ).withColumn("q_nrm", norm(F.col("q_vec")))
+    cand = (
+        short.join(base, "id")
+        .join(F.broadcast(qbase), "query_id")
+        .select(
+            "query_id",
+            F.col("id").alias("neighbor_id"),
+            F.col("vec").alias("c_vec"),
+            F.col("nrm").alias("c_nrm"),
+            "q_vec",
+            "q_nrm",
+        )
+    )
+    return _exact_topk(cand, k)
+
+
+def _manifest_codebooks(rows) -> list[list[list[float]]]:
+    """Decode codebooks[s][j] from the (s, j, codeword) rows of a PQ
+    manifest."""
+    m = 1 + max(r["s"] for r in rows)
+    n_codes = 1 + max(r["j"] for r in rows)
+    books: list[list[list[float]]] = [
+        [None] * n_codes for _ in range(m)  # type: ignore[list-item]
+    ]
+    for r in rows:
+        books[r["s"]][r["j"]] = list(r["codeword"])
+    return books
+
+
+def _pq_base(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, vec, nrm): the exact-rerank side of a PQ index, norms
+    computed once per row."""
+    return corpus.select(
+        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("vec")
+    ).withColumn("nrm", norm(F.col("vec")))
+
+
 def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -715,12 +803,10 @@ def pq_topk(
     """PQ ADC top-k with exact rerank — the memory-compression
     counterpart of the other ANN paths (same output schema as
     ``ivf_topk``): the corpus is scanned as m-byte codes, each query's
-    asymmetric distance is m table lookups summed in INTEGER
-    micro-units (order-free, engine-exact — the float-sum of lookup
-    parts would diverge by ulps between engines and flip near-tie
-    shortlist cuts), the ``shortlist_factor × k`` ADC survivors are
-    reranked by EXACT cosine in the original space (bucket-then-verify
-    — output cosines are exact, approximation only affects WHICH
+    asymmetric distance is m table lookups summed in integer
+    micro-units, and the ``shortlist_factor × k`` ADC survivors are
+    reranked by EXACT cosine in the original space (``_adc_rerank`` —
+    output cosines are exact, approximation only affects WHICH
     candidates are considered).
 
     Plan shape: codes posexplode (N×m narrow rows) ⟗ broadcast LUT
@@ -737,57 +823,10 @@ def pq_topk(
     codes = pq_encode(corpus, codebooks, id_col, vec_col).select(
         "id", F.posexplode("codes").alias("s", "code")
     )
-    # ONE driver pull of the bounded query batch feeds both the LUT
-    # (same micro-quantized partials as before) and the rerank side
-    session = queries.sparkSession
-    qids, qmat = _pull_matrix(
-        queries.select(F.col(id_col), _as_double(F.col(vec_col)).alias(vec_col)),
-        id_col,
-        vec_col,
-    )
-    lut = _pq_lut_from(session, qids, qmat, codebooks)
-    adist = (
-        codes.join(F.broadcast(lut), ["s", "code"])
-        .filter(F.col("id") != F.col("query_id"))
-        .groupBy("query_id", "id")
-        .agg(F.sum("part_micro").alias("adist_micro"))
-    )
-    wl = Window.partitionBy("query_id").orderBy(
-        F.col("adist_micro").asc(), F.col("id").asc()
-    )
-    short = (
-        adist.withColumn("_r", F.row_number().over(wl))
-        .filter(F.col("_r") <= shortlist_factor * k)
-        .select("query_id", "id")
-    )
-    base = corpus.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("vec")
-    ).withColumn("nrm", norm(F.col("vec")))
-    # rerank query side from the SAME pull (bit-identical values; qnrm
-    # still the same JVM norm() fold)
-    qbase = session.createDataFrame(
-        [(int(qi), [float(x) for x in qv]) for qi, qv in zip(qids, qmat)],
-        "query_id long, qvec array<double>",
-    ).withColumn("qnrm", norm(F.col("qvec")))
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("id").asc()
-    )
-    return (
-        short.join(base, "id")
-        .join(F.broadcast(qbase), "query_id")
-        .withColumn(
-            # 6dp BEFORE the rank window — see brute_force_topk note
-            "cos",
-            F.round(dot(F.col("vec"), F.col("qvec")) / (F.col("nrm") * F.col("qnrm")), 6),
-        )
-        .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            "rank",
-            F.col("cos").alias("cosine"),
-        )
+    qids, qmat = _query_batch(queries, id_col, vec_col)
+    return _adc_rerank(
+        codes, _pq_base(corpus, id_col, vec_col), codebooks, qids, qmat, k,
+        shortlist_factor,
     )
 
 
@@ -850,6 +889,32 @@ def pq_train_codebooks(
     return books
 
 
+def _cell_ids(
+    corpus: DataFrame, centroids: list[list[float]], id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, cell): each vector's IVF cell, keyed like the PQ tables."""
+    return _assign_cells(corpus, centroids, id_col, vec_col).select(
+        F.col("neighbor_id").alias("id"), "cell"
+    )
+
+
+def _ivfpq_codes(
+    corpus: DataFrame,
+    cells: DataFrame,
+    codebooks: list[list[list[float]]],
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(id, cell, s, code): the IVFPQ code stream — ``corpus``'s PQ
+    codes tagged with its ``_cell_ids`` — whether scanned in session,
+    built or upserted."""
+    return (
+        pq_encode(corpus, codebooks, id_col, vec_col)
+        .join(cells, "id")
+        .select("id", "cell", F.posexplode("codes").alias("s", "code"))
+    )
+
+
 def ivfpq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -894,82 +959,23 @@ def ivfpq_topk(
         if centroids is not None
         else ivf_centroids(corpus, id_col, vec_col, n_cells, seed)
     )
-    nearest = _cell_exprs(cents)
     if codebooks is None:
         codebooks = pq_codebooks(corpus, id_col, vec_col, m, n_codes, pq_seed)
-    codes = (
-        pq_encode(corpus, codebooks, id_col, vec_col)
-        .join(
-            corpus.select(
-                F.col(id_col).alias("id"),
-                _as_double(F.col(vec_col)).alias("v"),
-            )
-            .withColumn("nrm", norm(F.col("v")))
-            .select(
-                "id",
-                F.coalesce(
-                    nearest(F.col("v"), F.col("nrm"), 1)[0], F.lit(0)
-                ).alias("cell"),
-            ),
-            "id",
-        )
-        .select("id", "cell", F.posexplode("codes").alias("s", "code"))
+    codes = _ivfpq_codes(
+        corpus, _cell_ids(corpus, cents, id_col, vec_col), codebooks, id_col, vec_col
     )
-    # ONE driver pull of the bounded query batch feeds probes, LUT and
-    # rerank side (probe cells via the bit-exact _cell_exprs replica)
-    session = queries.sparkSession
-    qids, qmat = _pull_matrix(
-        queries.select(F.col(id_col), _as_double(F.col(vec_col)).alias(vec_col)),
-        id_col,
-        vec_col,
-    )
-    qrows = _nearest_cells_rows(qids, qmat, cents, n_probe)
-    probes = session.createDataFrame(
-        [(qi, int(c)) for qi, _, cells in qrows for c in cells],
+    # probe cells from the pulled batch via the bit-exact _cell_exprs
+    # replica
+    qids, qmat = _query_batch(queries, id_col, vec_col)
+    probes = queries.sparkSession.createDataFrame(
+        [(qi, int(c)) for qi, _, cells in _nearest_cells_rows(qids, qmat, cents, n_probe)
+         for c in cells],
         "query_id long, cell int",
     )
-    lut = _pq_lut_from(session, list(qids), qmat, codebooks)
-    adist = (
-        codes.join(F.broadcast(probes), "cell")
-        .join(F.broadcast(lut), ["query_id", "s", "code"])
-        .filter(F.col("id") != F.col("query_id"))
-        .groupBy("query_id", "id")
-        .agg(F.sum("part_micro").alias("adist_micro"))
-    )
-    wl = Window.partitionBy("query_id").orderBy(
-        F.col("adist_micro").asc(), F.col("id").asc()
-    )
-    short = (
-        adist.withColumn("_r", F.row_number().over(wl))
-        .filter(F.col("_r") <= shortlist_factor * k)
-        .select("query_id", "id")
-    )
-    base = corpus.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("vec")
-    ).withColumn("nrm", norm(F.col("vec")))
-    qbase = session.createDataFrame(
-        [(int(qi), [float(x) for x in qv]) for qi, qv in zip(qids, qmat)],
-        "query_id long, qvb array<double>",
-    ).withColumn("qbn", norm(F.col("qvb")))
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("id").asc()
-    )
-    return (
-        short.join(base, "id")
-        .join(F.broadcast(qbase), "query_id")
-        .withColumn(
-            # 6dp BEFORE the rank window — see brute_force_topk note
-            "cos",
-            F.round(dot(F.col("vec"), F.col("qvb")) / (F.col("nrm") * F.col("qbn")), 6),
-        )
-        .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            "rank",
-            F.col("cos").alias("cosine"),
-        )
+    return _adc_rerank(
+        codes.join(F.broadcast(probes), "cell"),
+        _pq_base(corpus, id_col, vec_col),
+        codebooks, qids, qmat, k, shortlist_factor,
     )
 
 
@@ -1163,34 +1169,8 @@ def ivf_topk(
             n_cells=n_cells,
             seed=seed,
         )
-    # _cell_exprs builds the centroid matrix/norms as ONE nested-array
-    # literal each (a single py4j call, constant-folded JVM-side;
-    # per-scalar F.lit loops would cost thousands of driver round
-    # trips) and binds the row norm OUTSIDE the per-centroid lambda
-    # (cosine() inline would re-fold norm(vec) once per centroid).
-    # Centroid norms are plan-time Python floats — IEEE binary64 with
-    # the same sequential fold order as norm(), bitwise-equal to JVM
-    # evaluation.
     nearest_cells = _cell_exprs(centroids)
-
-    # Per-row norms are projected once per side: cell assignment and
-    # the per-pair score both reuse them (cosine() inline = 3 array
-    # folds per pair; this shape = 1). Bitwise-identical arithmetic.
-    # coalesce makes `cell` NON-NULLABLE (the [0] getItem alone is
-    # nullable), so the join's inferred isnotnull(cell) constraint
-    # folds to true instead of being pushed to the scan with the whole
-    # 16-dot cell expression substituted in — which would evaluate the
-    # assignment TWICE per corpus row (the pushdown-duplication trap).
-    c = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("c_vec")
-        )
-        .withColumn("c_nrm", norm(F.col("c_vec")))
-        .withColumn(
-            "cell",
-            F.coalesce(nearest_cells(F.col("c_vec"), F.col("c_nrm"), 1)[0], F.lit(0)),
-        )
-    )
+    c = _assign_cells(corpus, centroids, id_col, vec_col)
     q = (
         queries.select(
             F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("q_vec")
@@ -1198,28 +1178,11 @@ def ivf_topk(
         .withColumn("q_nrm", norm(F.col("q_vec")))
         .withColumn("cell", F.explode(nearest_cells(F.col("q_vec"), F.col("q_nrm"), n_probe)))
     )
-    cand = c.join(q, "cell").filter(F.col("query_id") != F.col("neighbor_id"))
     # (query, neighbor) pairs are already unique: each neighbor lives
     # in exactly ONE cell and a query's probe cells are distinct — no
     # dedup shuffle needed
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        # round to 6dp BEFORE ranking (matching brute_force_topk and
-        # every oracle): ranking on raw cos with 6dp output can
-        # hash-diverge when two candidates round to the same 6dp
-        # value but differ in raw value (ADVICE r11)
-        F.round(
-            dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_nrm") * F.col("c_nrm")), 6
-        ).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.col("cos").alias("cosine"))
+    return _exact_topk(
+        c.join(q, "cell").filter(F.col("query_id") != F.col("neighbor_id")), k
     )
 
 
@@ -1258,9 +1221,10 @@ def _nearest_cells_rows(qids, qmat, centroids, n):
 def _cell_exprs(centroids: list[list[float]]):
     """Build the shared cell-assignment closure over a centroid
     literal; returns ``nearest_cells(vec, nrm, n) -> Column`` (array
-    of the n cell ids with highest cosine to vec)."""
-    cents_lit = F.lit([list(c) for c in centroids])
-    cnorms_lit = F.lit([_py_norm(cv) for cv in centroids])
+    of the n cell ids with highest cosine to vec). The row norm is
+    bound OUTSIDE the per-centroid lambda (cosine() inline would
+    re-fold norm(vec) once per centroid)."""
+    cents_lit, cnorms_lit = _centroid_lits(tuple(tuple(c) for c in centroids))
 
     def nearest_cells(vec: F.Column, nrm: F.Column, n: int) -> F.Column:
         scored = F.transform(
@@ -1276,6 +1240,21 @@ def _cell_exprs(centroids: list[list[float]]):
     return nearest_cells
 
 
+@functools.lru_cache(maxsize=16)
+def _centroid_lits(centroids: tuple[tuple[float, ...], ...]):
+    """The centroid matrix and norm literals, memoized like
+    ``_bucket_expr``: F.lit of a nested list is one py4j call per
+    float (~0.2 s for 16×64 centroids), and ivf_topk assigns its
+    corpus and probes its queries against the same centroids.
+    Centroid norms are plan-time Python floats — IEEE binary64 with
+    the same sequential fold order as norm(), bitwise-equal to JVM
+    evaluation."""
+    return (
+        F.lit([list(c) for c in centroids]),
+        F.lit([_py_norm(list(c)) for c in centroids]),
+    )
+
+
 def _assign_cells(
     corpus: DataFrame,
     centroids: list[list[float]],
@@ -1283,8 +1262,13 @@ def _assign_cells(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Assign each vector to its nearest centroid's cell — the shared
-    kernel of build, upsert, and in-session ivf_topk. One scan, no
-    shuffle; norms are projected once per row."""
+    kernel of the IVF and IVFPQ builds, upserts and in-session top-k.
+    One scan, no shuffle; norms are projected once per row. coalesce
+    makes ``cell`` NON-NULLABLE (the [0] getItem alone is nullable), so
+    a join's inferred isnotnull(cell) folds to true instead of being
+    pushed to the scan with the whole cell expression substituted —
+    which would evaluate the assignment TWICE per row (the
+    pushdown-duplication trap)."""
     nearest_cells = _cell_exprs(centroids)
     return (
         corpus.select(
@@ -1644,19 +1628,9 @@ def ivf_query_index(
             candidate_ids.select(_one_col(candidate_ids)).distinct().count(),
             _manifest_n_vectors(lake, crows, "cells_table"),
         )
-    # ONE Arrow pull of the bounded query batch; probe cells and
-    # norms are computed driver-side by the bit-exact _cell_exprs
-    # replica, then the query frame is a local relation. The old path
-    # localCheckpointed q and ran a separate distinct-collect for the
-    # probed cells: two extra driver round-trips (plus a fresh
-    # centroid-literal codegen) per query call (guide §5).
-    qids, qmat = _pull_matrix(
-        queries.select(
-            F.col(id_col), _as_double(F.col(vec_col)).alias(vec_col)
-        ),
-        id_col,
-        vec_col,
-    )
+    # probe cells and norms are computed driver-side by the bit-exact
+    # _cell_exprs replica, then the query frame is a local relation
+    qids, qmat = _query_batch(queries, id_col, vec_col)
     qrows = _nearest_cells_rows(qids, qmat, centroids, n_probe)
     q = queries.sparkSession.createDataFrame(
         [
@@ -1674,25 +1648,8 @@ def ivf_query_index(
         )
     c = lake.read(cells_tbl).filter(F.col("cell").isin(*[F.lit(p) for p in probed]))
     c = _semi_filter(c, candidate_ids, "neighbor_id", broadcast_filter)
-    cand = c.join(q, "cell").filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        # round to 6dp BEFORE ranking (matching brute_force_topk and
-        # every oracle): ranking on raw cos with 6dp output can
-        # hash-diverge when two candidates round to the same 6dp
-        # value but differ in raw value (ADVICE r11)
-        F.round(
-            dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_nrm") * F.col("c_nrm")), 6
-        ).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.col("cos").alias("cosine"))
+    return _exact_topk(
+        c.join(q, "cell").filter(F.col("query_id") != F.col("neighbor_id")), k
     )
 
 
@@ -1744,28 +1701,11 @@ def lsh_topk(
         q = q.select(
             "query_id", "q_vec", "q_nrm", F.explode(probes).alias("bucket")
         )
-    cand = c.join(q, "bucket").filter(F.col("query_id") != F.col("neighbor_id"))
     # pairs are unique without dedup: the corpus row sits in ONE
     # bucket and the multiprobe list (bucket + distinct 1-bit flips)
     # has no repeats
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        # round to 6dp BEFORE ranking (matching brute_force_topk and
-        # every oracle): ranking on raw cos with 6dp output can
-        # hash-diverge when two candidates round to the same 6dp
-        # value but differ in raw value (ADVICE r11)
-        F.round(
-            dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_nrm") * F.col("c_nrm")), 6
-        ).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.col("cos").alias("cosine"))
+    return _exact_topk(
+        c.join(q, "bucket").filter(F.col("query_id") != F.col("neighbor_id")), k
     )
 
 
@@ -2078,25 +2018,19 @@ def jl_signs(d_in: int, d_out: int) -> list[list[int]]:
 # trips per call). Column objects are immutable unresolved expression
 # trees over fixed internal column names ("_m"), so one construction
 # serves every later DataFrame. This memoizes CODE, not results.
-_JL_COMPS: dict[tuple[int, int], object] = {}
-_JL_BUCKET: dict[tuple[int, int], object] = {}
-
-
+@functools.cache
 def _jl_comps(d_in: int, d_out: int):
     """(j, proj_micro) struct array over the micro-ints column "_m"."""
-    key = (d_in, d_out)
-    if key not in _JL_COMPS:
-        signs = jl_signs(d_in, d_out)
-        _JL_COMPS[key] = F.array(
-            *[
-                F.struct(
-                    F.lit(j).alias("j"),
-                    _jl_fold(signs[j]).alias("proj_micro"),
-                )
-                for j in range(d_out)
-            ]
-        )
-    return _JL_COMPS[key]
+    signs = jl_signs(d_in, d_out)
+    return F.array(
+        *[
+            F.struct(
+                F.lit(j).alias("j"),
+                _jl_fold(signs[j]).alias("proj_micro"),
+            )
+            for j in range(d_out)
+        ]
+    )
 
 
 def _jl_fold(sign_row: list[int]):
@@ -2109,19 +2043,15 @@ def _jl_fold(sign_row: list[int]):
     )
 
 
+@functools.cache
 def _jl_bucket(d_in: int, d_out: int):
     """Sign-pattern bucket (bit j set iff proj_j >= 0) over "_m"."""
-    key = (d_in, d_out)
-    if key not in _JL_BUCKET:
-        signs = jl_signs(d_in, d_out)
-        projs = [_jl_fold(signs[j]) for j in range(d_out)]
-        bucket = projs[0] * F.lit(0)  # typed zero
-        for j in range(d_out):
-            bucket = bucket + F.when(
-                projs[j] >= 0, F.lit(1 << j)
-            ).otherwise(F.lit(0))
-        _JL_BUCKET[key] = bucket.cast("long")
-    return _JL_BUCKET[key]
+    signs = jl_signs(d_in, d_out)
+    projs = [_jl_fold(signs[j]) for j in range(d_out)]
+    bucket = projs[0] * F.lit(0)  # typed zero
+    for j in range(d_out):
+        bucket = bucket + F.when(projs[j] >= 0, F.lit(1 << j)).otherwise(F.lit(0))
+    return bucket.cast("long")
 
 
 def jl_project(
@@ -2201,9 +2131,7 @@ def jl_topk(
     harder for the same recall; widen d_out as cluster tightness
     allows.
 
-    Output schema matches brute_force_topk: (query_id, neighbor_id,
-    rank, cosine), rank 1..k by 6dp-rounded cosine desc, ties by
-    neighbor_id.
+    Output schema and ranking match brute_force_topk.
     """
     if d_in is None:
         d_in = len(corpus.select(vec_col).first()[0])
@@ -2241,24 +2169,11 @@ def jl_topk(
     # (the jl_project docstring's "corpus shuffles once on bucket" was
     # the pre-broadcast plan; a bucket shuffle of the corpus is
     # exactly what a 100 TB serving path cannot afford per batch).
-    cand = c.join(F.broadcast(q), "bucket").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_nrm") * F.col("c_nrm")),
-            6,
-        ).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.col("cos").alias("cosine"))
+    return _exact_topk(
+        c.join(F.broadcast(q), "bucket").filter(
+            F.col("query_id") != F.col("neighbor_id")
+        ),
+        k,
     )
 
 
@@ -2277,10 +2192,8 @@ def hard_negatives(
     negatives are trivially separable; in-class neighbors are
     positives, not negatives).
 
-    Same exact-cosine machinery and determinism contract as
-    brute_force_topk (rank on the 6dp-rounded cosine desc, ties by
-    neighbor_id asc), with the label-exclusion predicate pushed into
-    the broadcast join condition — rows never materialize for
+    Same exact rerank (``_exact_topk``) as brute_force_topk, with the
+    label-exclusion predicate pushed into the broadcast join condition — rows never materialize for
     same-label pairs. At scale, swap the brute-force scorer for any
     bucketed front-end (IVF/LSH/PQ) and keep the label filter in the
     candidate join; the mining semantics are the filter + top-k, not
@@ -2298,30 +2211,12 @@ def hard_negatives(
         F.col(label_col).alias("q_label"),
         _as_double(F.col(vec_col)).alias("q_vec"),
     ).withColumn("q_nrm", norm(F.col("q_vec")))
-    scored = c.join(
+    cand = c.join(
         F.broadcast(q),
         (F.col("query_id") != F.col("neighbor_id"))
         & (F.col("q_label") != F.col("neg_label")),
-    ).select(
-        "query_id",
-        "neighbor_id",
-        "neg_label",
-        F.round(
-            dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_nrm") * F.col("c_nrm")),
-            6,
-        ).alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", "neg_label", "rank",
-            F.col("cos").alias("cosine"),
-        )
-    )
+    return _exact_topk(cand, k, ("neg_label",))
 
 
 def pq_build_index(
@@ -2372,12 +2267,7 @@ def pq_build_index(
             "id", F.posexplode("codes").alias("s", "code")
         ),
     )
-    lake.overwrite(
-        vecs_tbl,
-        corpus.select(
-            F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("vec")
-        ).withColumn("nrm", norm(F.col("vec"))),
-    )
+    lake.overwrite(vecs_tbl, _pq_base(corpus, id_col, vec_col))
     manifest = spark.createDataFrame(
         [
             (s, j, list(cw), codes_tbl, vecs_tbl)
@@ -2428,68 +2318,11 @@ def pq_query_index(
     in-session stream; pinned in tests/test_ivf_index.py's PQ twin).
     """
     mrows = _read_manifest(lake, f"{name}_codebooks", "pq_query_index")
-    m = 1 + max(r["s"] for r in mrows)
-    n_codes = 1 + max(r["j"] for r in mrows)
-    codebooks: list[list[list[float]]] = [
-        [None] * n_codes for _ in range(m)  # type: ignore[list-item]
-    ]
-    for r in mrows:
-        codebooks[r["s"]][r["j"]] = list(r["codeword"])
-    codes_tbl = mrows[0]["codes_table"]
-    vecs_tbl = mrows[0]["vectors_table"]
-    codes = lake.read(codes_tbl)
-    # ONE driver pull of the bounded query batch feeds both the LUT
-    # and the rerank side — previously the LUT pulled and the rerank
-    # re-scanned the query frame in the main job (two passes over the
-    # same rows; guide §1.2 "don't compute things twice")
-    session = queries.sparkSession
-    qids, qmat = _pull_matrix(
-        queries.select(F.col(id_col), _as_double(F.col(vec_col)).alias(vec_col)),
-        id_col,
-        vec_col,
-    )
-    lut = _pq_lut_from(session, qids, qmat, codebooks)
-    adist = (
-        codes.join(F.broadcast(lut), ["s", "code"])
-        .filter(F.col("id") != F.col("query_id"))
-        .groupBy("query_id", "id")
-        .agg(F.sum("part_micro").alias("adist_micro"))
-    )
-    wl = Window.partitionBy("query_id").orderBy(
-        F.col("adist_micro").asc(), F.col("id").asc()
-    )
-    short = (
-        adist.withColumn("_r", F.row_number().over(wl))
-        .filter(F.col("_r") <= shortlist_factor * k)
-        .select("query_id", "id")
-    )
-    base = lake.read(vecs_tbl)
-    # rerank query side from the SAME pull (values are bit-identical:
-    # Arrow float64 round-trips exactly); qnrm still computed by the
-    # same JVM norm() fold as before
-    qbase = session.createDataFrame(
-        [(int(qi), [float(x) for x in qv]) for qi, qv in zip(qids, qmat)],
-        "query_id long, qvec array<double>",
-    ).withColumn("qnrm", norm(F.col("qvec")))
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("id").asc()
-    )
-    return (
-        short.join(base, "id")
-        .join(F.broadcast(qbase), "query_id")
-        .withColumn(
-            # 6dp BEFORE the rank window — see brute_force_topk note
-            "cos",
-            F.round(dot(F.col("vec"), F.col("qvec")) / (F.col("nrm") * F.col("qnrm")), 6),
-        )
-        .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            "rank",
-            F.col("cos").alias("cosine"),
-        )
+    qids, qmat = _query_batch(queries, id_col, vec_col)
+    return _adc_rerank(
+        lake.read(mrows[0]["codes_table"]),
+        lake.read(mrows[0]["vectors_table"]),
+        _manifest_codebooks(mrows), qids, qmat, k, shortlist_factor,
     )
 
 
@@ -2525,7 +2358,6 @@ def ivfpq_build_index(
     build time; queries re-derive nothing.
     """
     cents = ivf_centroids(corpus, id_col, vec_col, n_cells, seed)
-    nearest = _cell_exprs(cents)
     if codebooks is None:
         codebooks = pq_codebooks(corpus, id_col, vec_col, m, n_codes, pq_seed)
     spark = corpus.sparkSession
@@ -2537,32 +2369,11 @@ def ivfpq_build_index(
     codes_tbl = f"{name}_codes_v{version}"
     vecs_tbl = f"{name}_vectors_v{version}"
     books_tbl = f"{name}_codebooks_v{version}"
-    assigned = (
-        corpus.select(
-            F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-        )
-        .withColumn("nrm", norm(F.col("v")))
-        .select(
-            "id",
-            F.coalesce(nearest(F.col("v"), F.col("nrm"), 1)[0], F.lit(0)).alias(
-                "cell"
-            ),
-        )
+    cells = _cell_ids(corpus, cents, id_col, vec_col)
+    lake.write_parts(
+        codes_tbl, _ivfpq_codes(corpus, cells, codebooks, id_col, vec_col), "cell"
     )
-    codes = (
-        pq_encode(corpus, codebooks, id_col, vec_col)
-        .join(assigned, "id")
-        .select("id", "cell", F.posexplode("codes").alias("s", "code"))
-    )
-    lake.write_parts(codes_tbl, codes, "cell")
-    vectors = (
-        corpus.select(
-            F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("vec")
-        )
-        .withColumn("nrm", norm(F.col("vec")))
-        .join(assigned.select("id", "cell"), "id")
-    )
-    lake.write_parts(vecs_tbl, vectors, "cell")
+    lake.write_parts(vecs_tbl, _pq_base(corpus, id_col, vec_col).join(cells, "id"), "cell")
     lake.overwrite(
         books_tbl,
         spark.createDataFrame(
@@ -2629,15 +2440,9 @@ def ivfpq_query_index(
     cents = [list(r["centroid"]) for r in crows]
     codes_tbl = crows[0]["codes_table"]
     vecs_tbl = crows[0]["vectors_table"]
-    books_tbl = crows[0]["codebooks_table"]
-    brows = _read_manifest(lake, books_tbl, "ivfpq_query_index")
-    m = 1 + max(r["s"] for r in brows)
-    n_codes = 1 + max(r["j"] for r in brows)
-    codebooks: list[list[list[float]]] = [
-        [None] * n_codes for _ in range(m)  # type: ignore[list-item]
-    ]
-    for r in brows:
-        codebooks[r["s"]][r["j"]] = list(r["codeword"])
+    codebooks = _manifest_codebooks(
+        _read_manifest(lake, crows[0]["codebooks_table"], "ivfpq_query_index")
+    )
     if candidate_ids is not None and validate_candidates:
         _validate_candidate_subset(
             lake, candidate_ids, vecs_tbl, "id", "ivfpq_query_index"
@@ -2651,18 +2456,8 @@ def ivfpq_query_index(
             _manifest_n_vectors(lake, crows, "vectors_table"),
         )
     session = queries.sparkSession
-    # ONE Arrow pull of the bounded query batch (the ANN entries'
-    # standing assumption) feeds probes, LUT and rerank side; probe
-    # cells come from the bit-exact _cell_exprs replica. The old path
-    # paid a persist + a distinct-collect + a separate Arrow pull for
-    # the LUT (three driver round-trips over the same 20-row batch).
-    qids, qmat = _pull_matrix(
-        queries.select(
-            F.col(id_col), _as_double(F.col(vec_col)).alias(vec_col)
-        ),
-        id_col,
-        vec_col,
-    )
+    # probe cells come from the bit-exact _cell_exprs replica
+    qids, qmat = _query_batch(queries, id_col, vec_col)
     if not len(qids):
         return session.createDataFrame(
             [], "query_id long, neighbor_id long, rank int, cosine double"
@@ -2675,48 +2470,10 @@ def ivfpq_query_index(
     probed_cells = sorted({int(c) for _, _, cells in qrows for c in cells})
     codes = lake.read(codes_tbl).filter(F.col("cell").isin(probed_cells))
     codes = _semi_filter(codes, candidate_ids, "id", broadcast_filter)
-    lut = _pq_lut_from(session, list(qids), qmat, codebooks)
-    adist = (
-        codes.join(F.broadcast(probes), "cell")
-        .join(F.broadcast(lut), ["query_id", "s", "code"])
-        .filter(F.col("id") != F.col("query_id"))
-        .groupBy("query_id", "id")
-        .agg(F.sum("part_micro").alias("adist_micro"))
-    )
-    wl = Window.partitionBy("query_id").orderBy(
-        F.col("adist_micro").asc(), F.col("id").asc()
-    )
-    short = (
-        adist.withColumn("_r", F.row_number().over(wl))
-        .filter(F.col("_r") <= shortlist_factor * k)
-        .select("query_id", "id")
-    )
-    base = lake.read(vecs_tbl)
-    # rerank query side from the SAME collect (values bit-identical;
-    # qbn computed by the same JVM norm() fold as before)
-    qbase = session.createDataFrame(
-        [(int(qi), [float(x) for x in qv]) for qi, qv in zip(qids, qmat)],
-        "query_id long, qvb array<double>",
-    ).withColumn("qbn", norm(F.col("qvb")))
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("id").asc()
-    )
-    return (
-        short.join(base, "id")
-        .join(F.broadcast(qbase), "query_id")
-        .withColumn(
-            # 6dp BEFORE the rank window — see brute_force_topk note
-            "cos",
-            F.round(dot(F.col("vec"), F.col("qvb")) / (F.col("nrm") * F.col("qbn")), 6),
-        )
-        .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            F.col("id").alias("neighbor_id"),
-            "rank",
-            F.col("cos").alias("cosine"),
-        )
+    return _adc_rerank(
+        codes.join(F.broadcast(probes), "cell"),
+        lake.read(vecs_tbl),
+        codebooks, qids, qmat, k, shortlist_factor,
     )
 
 
@@ -2747,41 +2504,17 @@ def ivfpq_upsert_index(
     codes_tbl = crows[0]["codes_table"]
     vecs_tbl = crows[0]["vectors_table"]
     books_tbl = crows[0]["codebooks_table"]
-    brows = _read_manifest(lake, books_tbl, "ivfpq_upsert_index")
-    m = 1 + max(r["s"] for r in brows)
-    n_codes = 1 + max(r["j"] for r in brows)
-    codebooks: list[list[list[float]]] = [
-        [None] * n_codes for _ in range(m)  # type: ignore[list-item]
-    ]
-    for r in brows:
-        codebooks[r["s"]][r["j"]] = list(r["codeword"])
-    nearest = _cell_exprs(cents)
-    assigned = (
-        new_vectors.select(
-            F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-        )
-        .withColumn("nrm", norm(F.col("v")))
-        .select(
-            "id",
-            F.coalesce(nearest(F.col("v"), F.col("nrm"), 1)[0], F.lit(0)).alias(
-                "cell"
-            ),
-        )
+    codebooks = _manifest_codebooks(
+        _read_manifest(lake, books_tbl, "ivfpq_upsert_index")
     )
-    codes = (
-        pq_encode(new_vectors, codebooks, id_col, vec_col)
-        .join(assigned, "id")
-        .select("id", "cell", F.posexplode("codes").alias("s", "code"))
+    cells = _cell_ids(new_vectors, cents, id_col, vec_col)
+    lake.merge_replace(
+        codes_tbl, _ivfpq_codes(new_vectors, cells, codebooks, id_col, vec_col),
+        "cell", "id",
     )
-    lake.merge_replace(codes_tbl, codes, "cell", "id")
-    vectors = (
-        new_vectors.select(
-            F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("vec")
-        )
-        .withColumn("nrm", norm(F.col("vec")))
-        .join(assigned.select("id", "cell"), "id")
+    delta = lake.merge_replace(
+        vecs_tbl, _pq_base(new_vectors, id_col, vec_col).join(cells, "id"), "cell", "id"
     )
-    delta = lake.merge_replace(vecs_tbl, vectors, "cell", "id")
     # refresh the manifest's corpus count — see ivf_upsert_index
     # (prior total + partition-pruned merge delta, no O(corpus) count)
     prior_n = crows[0].asDict().get("n_vectors")

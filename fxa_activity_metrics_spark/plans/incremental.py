@@ -27,6 +27,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fxa_activity_metrics_spark import cacheutil
 from fxa_activity_metrics_spark.functions.core import sample_cohort
 from fxa_activity_metrics_spark.operators import flows as flow_ops
 from fxa_activity_metrics_spark.operators.activity import typed_day_events
@@ -107,27 +108,29 @@ class ImportJob:
     # -- execution ----------------------------------------------------------
 
     def import_day(self, day: dt.date, path: str, max_day: dt.date) -> None:
-        """One day-file → three sampled lake variants (S5)."""
-        raw = read_day_csv(
-            self.spark,
-            path,
-            self.dataset.csv_schema,
-            max_lengths=self.dataset.max_lengths,
-        )
-        for suffix, percent, months in SAMPLE_RATES:
-            cutoff = _add_months(max_day, -months)
-            typed = typed_day_events(
-                raw,
-                day,
-                id_column=self.dataset.id_column,
-                percent=percent,
-                retention_cutoff=cutoff,
-                columns=[f.name for f in self.dataset.lake_schema.fields if f.name != "day"],
+        """One day-file → three sampled lake variants (S5). The cached
+        day file is released once every variant is written."""
+        with cacheutil.scope():
+            raw = read_day_csv(
+                self.spark,
+                path,
+                self.dataset.csv_schema,
+                max_lengths=self.dataset.max_lengths,
             )
-            if self.write_perm:
-                self.lake.write_days(self.table(suffix), typed)
-            if self.after_day:
-                self.after_day(self, day, raw, suffix, percent)
+            for suffix, percent, months in SAMPLE_RATES:
+                cutoff = _add_months(max_day, -months)
+                typed = typed_day_events(
+                    raw,
+                    day,
+                    id_column=self.dataset.id_column,
+                    percent=percent,
+                    retention_cutoff=cutoff,
+                    columns=[f.name for f in self.dataset.lake_schema.fields if f.name != "day"],
+                )
+                if self.write_perm:
+                    self.lake.write_days(self.table(suffix), typed)
+                if self.after_day:
+                    self.after_day(self, day, raw, suffix, percent)
 
     def expire(self, max_day: dt.date) -> None:
         """S6 + S7: retention expiry then compaction, per variant."""
@@ -333,17 +336,19 @@ def run_counts_import(
         files = {d: p for d, p in files.items() if d not in have}
     if not files:
         return 0
-    raw = None
-    for _, path in sorted(files.items()):
-        part = read_day_csv(spark, path, COUNTS_CSV_SCHEMA, max_errors=10)
-        raw = part if raw is None else raw.unionByName(part)
-    new = typed_counts(raw)
-    merged = (
-        existing.join(new, "day", "left_anti").unionByName(new)
-        if lake.exists("counts")
-        else new
-    )
-    lake.overwrite("counts", merged)
+    # one scope: the cached day files feed the union until it is written
+    with cacheutil.scope():
+        raw = None
+        for _, path in sorted(files.items()):
+            part = read_day_csv(spark, path, COUNTS_CSV_SCHEMA, max_errors=10)
+            raw = part if raw is None else raw.unionByName(part)
+        new = typed_counts(raw)
+        merged = (
+            existing.join(new, "day", "left_anti").unionByName(new)
+            if lake.exists("counts")
+            else new
+        )
+        lake.overwrite("counts", merged)
     return len(files)
 
 

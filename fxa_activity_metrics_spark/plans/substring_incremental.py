@@ -58,23 +58,6 @@ GRAM_TABLE = "substring_gram_counts"
 BASE_DAY = dt.date(1970, 1, 1)
 
 
-def append_gram_counts(
-    lake: Lake,
-    docs: DataFrame,
-    day: dt.date,
-    k: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    table: str = GRAM_TABLE,
-) -> None:
-    """Per-day gram-count build — one groupBy over the increment,
-    idempotent per day (dynamic partition overwrite replaces exactly
-    this day's counts on re-import)."""
-    occ = _positional_gram_hashes(docs, k, id_col, text_col)
-    counts = occ.groupBy("gh").agg(F.count(F.lit(1)).alias("cnt"))
-    lake.write_days(table, counts.withColumn("day", F.lit(day)), sort_cols=["gh"])
-
-
 def incremental_spans(
     lake: Lake,
     docs: DataFrame,

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from fxa_activity_metrics_spark import cacheutil
 from fxa_activity_metrics_spark.functions.core import truncate_columns
 
 # Injection patterns rejected by clean-flow-data.sh:20-45. One regex
@@ -101,10 +102,12 @@ def read_day_csv(
         nullValue=None,
         emptyValue="",
     )
-    df = df.cache()
+    # cached for the MAXERROR count and the typed read that follows;
+    # released by the caller's cacheutil scope once the day is written
+    df = cacheutil.track(df.cache())
     bad = df.filter(F.col(_CORRUPT).isNotNull()).count()
     if bad > max_errors:
-        df.unpersist()
+        cacheutil.release_frame(df)
         raise ValueError(
             f"CSV load of {path}: {bad} corrupt rows exceeds MAXERROR={max_errors}"
         )

@@ -150,6 +150,40 @@ def test_filter_half_tie_is_engine_stable(spark):
     assert (1 in kept) == expect_kept
 
 
+def test_avg_rounding_matches_duckdb_on_half_ties(spark):
+    """avg_logprob rounds exactly as the DuckDB oracle does, exact
+    half-ties included: −81 657 012 µnats over 24 grams (= −3.4023755)
+    is −3.402376 on both engines, and a sweep of ties at several gram
+    counts agrees value for value."""
+    import random
+
+    import duckdb
+
+    from fxa_activity_metrics_spark.operators.lmfilter import _avg_6dp
+
+    rng = random.Random(7)
+    pairs = [(-81657012, 24)] + [
+        (n * (2 * j + 1) // 2, n)
+        for n, j in (
+            (rng.choice([2, 4, 8, 16, 24, 50, 64, 200]), rng.randint(-20_000_000, 0))
+            for _ in range(300)
+        )
+    ]
+    got = {
+        (r["l"], r["n"]): r["avg"]
+        for r in spark.createDataFrame(pairs, "l long, n long")
+        .select("l", "n", _avg_6dp(F.col("l"), F.col("n")).alias("avg"))
+        .collect()
+    }
+    assert got[(-81657012, 24)] == -3.402376
+    con = duckdb.connect()
+    want = {
+        (l, n): con.execute(f"SELECT round({l} / 1e6 / {n}, 6)").fetchone()[0]
+        for l, n in pairs
+    }
+    assert got == want
+
+
 def test_in_domain_model_corpus(spark, docs):
     """CCNet setup: score against a DIFFERENT (in-domain) model. A doc
     made of the model's frequent bigrams must out-score one made of

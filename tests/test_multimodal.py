@@ -423,12 +423,14 @@ def test_png_crc_corruption_raises():
         mm._png_parse(bytes(b))
 
 
-def test_phash_batch_matches_per_image_across_mixed_batches():
+def test_phash_batch_matches_per_image_across_mixed_batches(monkeypatch):
     """The r14 batched kernel contract: one heterogeneous batch
     (PPM + PNG mixed-filter + zlib-wrapped, several image shapes,
     interleaved) hashes identically to batches of one — the
     shape-grouped stacking and the batched PNG unfilter must neither
-    reorder rows nor perturb a single integer."""
+    reorder rows nor perturb a single integer. A chunk width of 7
+    splits the 87 blobs into 13 chunks with a short last one, so the
+    chunk slice/concat path runs too."""
     import zlib
 
     import numpy as np
@@ -446,6 +448,8 @@ def test_phash_batch_matches_per_image_across_mixed_batches():
         blobs.append(mm.png_encode(img, filter_mode="mixed"))
         blobs.append(b"P6\n%d %d\n255\n" % (w, h) + img.tobytes())
     blobs.append(mm.ZLIB_MAGIC + zlib.compress(blobs[1]))
+    monkeypatch.setattr(mm, "_PHASH_CHUNK", 7)
+    assert len(blobs) % 7
     batched = mm.phash_batch(pd.Series(blobs))
     singly = pd.concat(
         [mm.phash_batch(pd.Series([b])) for b in blobs], ignore_index=True

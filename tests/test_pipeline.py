@@ -49,6 +49,19 @@ def test_force_reload_identical(spark, lake):
     assert _rows(lake.read("activity_events")) == before, "S5 idempotent overwrite"
 
 
+def test_run_leaves_no_persisted_rdds(spark, tmp_path):
+    """Each imported day file is cached for its MAXERROR count; the
+    cache must be gone once the day is written, so a backfill does
+    not pin one RDD per day."""
+    src = str(tmp_path / "src")
+    write_activity_days(src, [D1 + dt.timedelta(days=i) for i in range(5)])
+    lake = Lake(spark, str(tmp_path / "lake"))
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    assert len(ImportJob(spark=spark, lake=lake, dataset=ACTIVITY, source_dir=src).run()) == 5
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+
+
 def test_stragglers_filtered(lake):
     df = lake.read("activity_events")
     bad = df.filter(F.to_date("timestamp") != F.col("day")).count()

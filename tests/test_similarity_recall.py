@@ -36,6 +36,64 @@ def test_ann_recall(spark, exact_topk, name):
     assert recall >= 0.4, f"{name} recall {recall:.2f} < 0.4"
 
 
+def test_bucket_ids_memo_is_thread_safe(spark):
+    """foreachBatch sinks build LSH buckets on their own threads and
+    share one bounded expression memo. Threads cycling through more
+    plane sets than its 16 slots (so lookups race evictions) must
+    raise nothing and get the single-threaded buckets."""
+    import sys
+    import threading
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    from fxa_activity_metrics_spark.operators.similarity import (
+        _bucket_expr,
+        bucket_ids,
+        hyperplanes,
+    )
+
+    base = spark.createDataFrame(
+        [([0.5, -1.0, 2.0, 0.25],), ([-0.3, 0.7, -0.1, 1.5],), ([1.0, 1.0, -2.0, 0.0],)],
+        "vec array<double>",
+    )
+    plane_sets = [hyperplanes(4, 3, seed=f"race:{i}") for i in range(20)]
+
+    def buckets(order):
+        frames = [
+            bucket_ids(base, "vec", plane_sets[i]).select(F.lit(i).alias("i"), "bucket")
+            for i in order
+        ]
+        got = {}
+        for r in reduce(DataFrame.unionByName, frames).collect():
+            got.setdefault(r["i"], []).append(r["bucket"])
+        return {i: sorted(b) for i, b in got.items()}
+
+    want = buckets(range(20))
+    results, errors = {}, []
+
+    def worker(t):
+        try:
+            results[t] = buckets([(5 * t + j) % 20 for j in range(20)])
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=worker, args=(t,)) for t in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert results == {t: want for t in range(8)}
+    assert _bucket_expr.cache_info().currsize <= 16
+
+
 def test_embedding_neardup_lsh_subset_and_recall(spark):
     exact = {
         (r["id_a"], r["id_b"])

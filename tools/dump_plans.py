@@ -1,8 +1,17 @@
-"""Regenerate PLANS.md: the formatted physical plans of the headline
-queries at $SPARK_GRAFT_SF_DIR — the at-a-glance evidence that each
-operator's plan has the shape the 100 TB design depends on. The
-properties called out per plan are CI-pinned in tests/test_plans.py
-and the per-operator test files."""
+"""Dump formatted physical plans of registry queries at
+$SPARK_GRAFT_SF_DIR.
+
+    python tools/dump_plans.py                  # regenerate PLANS.md
+    python tools/dump_plans.py DIR QUERY [...]  # DIR/<QUERY>.txt each
+
+With no arguments it regenerates PLANS.md: the plans of the headline
+queries — the at-a-glance evidence that each operator's plan has the
+shape the 100 TB design depends on. The properties called out per plan
+are CI-pinned in tests/test_plans.py and the per-operator test files.
+With a directory and query names it writes each query's full
+``explain('formatted')`` text there, for before/after plan diffs of a
+change (run it once in a checkout of each side).
+"""
 
 from __future__ import annotations
 
@@ -11,6 +20,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from fxa_activity_metrics_spark import cacheutil  # noqa: E402
 from fxa_activity_metrics_spark.session import get_spark  # noqa: E402
 
 HEADLINE = {
@@ -95,11 +105,39 @@ HEADLINE = {
 }
 
 
-def main() -> None:
+def _explain(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def dump_dir(spark, sf_dir: str, outdir: str, names: list[str]) -> None:
+    """Write DIR/<name>.txt: the full formatted plan of each query."""
     import __spark_entry__ as em
 
+    qs = em.all_queries()
+    os.makedirs(outdir, exist_ok=True)
+    for name in names:
+        with open(os.path.join(outdir, f"{name}.txt"), "w") as f:
+            f.write(_explain(qs[name](spark, sf_dir)))
+        cacheutil.release_all()
+        print(f"wrote {name}.txt", flush=True)
+
+
+def main(argv: list[str]) -> None:
+    if len(argv) == 1:
+        sys.exit("usage: dump_plans.py [DIR QUERY [QUERY ...]]")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("plans")
+    if argv:
+        dump_dir(spark, sf_dir, argv[0], argv[1:])
+    else:
+        write_plans_md(spark, sf_dir)
+
+
+def write_plans_md(spark, sf_dir: str) -> None:
+    import __spark_entry__ as em
+
     out = [
         "# PLANS — physical-plan audit of the headline queries",
         "",
@@ -109,14 +147,9 @@ def main() -> None:
         "are CI-pinned in tests/test_plans.py and friends.",
         "",
     ]
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
     for name, blurb in HEADLINE.items():
         fn = em.queries().get(name) or getattr(em, f"q_{name}")
-        df = fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(mode)
-        tree = plan.split("\n\n")[0]
+        tree = _explain(fn(spark, sf_dir)).split("\n\n")[0]
         out.append(f"## {name}\n\n_{blurb}_\n\n```\n{tree}\n```\n")
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(root, "PLANS.md"), "w") as f:
@@ -125,4 +158,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])
