@@ -20,147 +20,29 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+import __spark_entry__ as entrymod  # noqa: E402
 from fxa_activity_metrics_spark.session import get_spark  # noqa: E402
 from fxa_activity_metrics_spark import cacheutil  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# headline set: reference-parity spine + the scale-path extension ops
-BENCH_QUERIES = [
-    "pricing_summary",
-    "order_revenue",
-    "nation_revenue",
-    "shipping_priority",
-    "top_suppliers",
-    "order_priority_returns",
-    "customer_distribution",
-    "daily_activity_per_device",
-    "multi_device_users_join",
-    "multi_device_users_window",
-    "multi_device_users_salted",
-    "flow_sessionize",
-    "asof_join",
-    "session_window",
-    "cohort_retention",
-    "funnel_steps",
-    "funnel_windowed",
-    "json_extract",
-    "cohort_sample",
-    "exact_dedup",
-    "minhash_lsh",
-    "jaccard_dedup",
-    "simhash",
-    "ann_bruteforce",
-    "ann_lsh",
-    "ann_ivf",
-    "embedding_neardup",
-    "embedding_neardup_gemm",
-    "embedding_neardup_blocked",
-    "embedding_neardup_lsh",
-    "embedding_neardup_lsh_auto",
-    "injection_filter",
-    "empty_backfill",
-    "text_quality",
-    "language_id",
-    "fingerprint",
-    "winnow_fingerprint",
-    "winnow_fingerprint_rk",
-    "dedup_clusters",
-    "dedup_spans",
-    "dedup_spans_exact",
-    "substring_dedup",
-    "ngram_decontam",
-    "pii_scrub",
-    "repetition_stats",
-    "stratified_sample",
-    "pack_sequences",
-    "training_manifest",
-    "token_histogram",
-    "cms_token_counts",
-    "token_count_bpe",
-    "token_count_bpe_real",
-    "blob_stats",
-    "phash",
-    "phash_pairs",
-    "chunk_documents",
-    "train_split",
-    "source_mixture",
-    "shard_shuffle",
-    "quality_classifier",
-    "bm25_search",
-    "embedding_decontam",
-    "clean_corpus",
-    "interval_join",
-    "curriculum_order",
-    "chunk_pack",
-    "blob_stats_compressed",
-    "phash_compressed",
-    "phash_png",
-    "query_text_index",
-    "ivf_query_index",
-    "lm_score",
-    "lm_filter",
-    "lm_score_trigram",
-    "lm_score_backoff",
-    "lm_buckets",
-    # round 7-8: semantic dedup, heavy hitters, TPC-H join shapes
-    "semantic_dedup",
-    "semantic_dedup_trained",
-    "heavy_hitters_mg",
-    "heavy_hitters_exact",
-    "min_cost_supplier",
-    "parts_supplier_stats",
-    "dormant_customers",
-    "small_qty_revenue",
-    "large_volume_orders",
-    "disjunctive_revenue",
-    "waiting_suppliers",
-    # round 8 session 2: the remaining TPC-H shapes — all 22 covered
-    "local_supplier_volume",
-    "forecast_revenue_change",
-    "volume_shipping",
-    "national_market_share",
-    "product_type_profit",
-    "returned_item_revenue",
-    "important_stock",
-    "late_shipment_priority",
-    "promo_revenue_effect",
-    "dominant_part_suppliers",
-    "bloom_decontam",
-    "daily_uniques_kmv",
-    "pagerank_neardup",
-    "triangle_counts",
-    "jl_projection",
-    # round 8 session 3: corpus curation + graph + sampling batch
-    "boilerplate_removal",
-    "weighted_sample",
-    "kcore_neardup",
-    "tfidf_terms",
-    "ann_jl",
-    "ann_pq",
-    "ann_ivfpq",
-    "neardup_editdist",
-    "source_overlap",
-    "novelty_score",
-    "rolling_actives",
-    "daily_spikes",
-    "scd2_history",
-    "locf_fill",
-    "pricing_rollup",
-    "event_type_pivot",
-    # round 10: contrastive mining, quality keepers, sketch set algebra
-    "hard_negatives",
-    "cluster_keepers",
-    "kmv_overlap",
-    "pq_query_index",
-    "ivfpq_query_index",
-    "kmv_day_overlap",
-    "text_vectors",
-    "text_ann",
-    # round 11: leakage-safe split audit + decontaminated assignment
-    "split_leakage",
-    "split_decontam",
-]
+# headline set: every live registry entry, in registry order, except
+# these 11 — the set every BENCH record since r01 times (pinned by
+# tests/test_bench_gate.py)
+NOT_BENCHED = frozenset({
+    "phash_clusters",
+    "parse_functions",
+    "scalar_functions",
+    "retention_filter",
+    "high_water_mark",
+    "partition_discovery",
+    "value_percentiles_exact",
+    "daily_uniques_exact",
+    "ann_filtered",
+    "ann_bruteforce_gemm",
+    "multi_device_users_grouped",
+})
+BENCH_QUERIES = [q for q in entrymod.queries() if q not in NOT_BENCHED]
 
 # Labeled quadratic configurations (their docstrings say so): they
 # exist to oracle-check and recall-bound the sub-quadratic scale
@@ -249,8 +131,6 @@ def scaling_violations(
 
 
 def main() -> None:
-    import __spark_entry__ as entrymod
-
     spark = get_spark("fxa-bench")
     qs = entrymod.all_queries()
     # warmup: JVM/codegen spin-up on a trivial job

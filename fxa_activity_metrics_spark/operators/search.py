@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from fxa_activity_metrics_spark.functions.core import hex_to_long
+from fxa_activity_metrics_spark.operators._lakeindex import commit, read_manifest, stage
 from fxa_activity_metrics_spark.operators.dedup import tokens
 
 from fxa_activity_metrics_spark import cacheutil
@@ -210,13 +211,14 @@ def _index_frames(
     return doclens, postings
 
 
-def _write_manifest_from_doclens(lake, name: str, version_tag: str, n_buckets: int) -> None:
-    """Recompute the manifest totals FROM the persisted doclens table
-    and swap the manifest. Recompute-from-state (not incremental
+def _stats_manifest(
+    lake, postings_tbl: str, doclens_tbl: str, n_buckets: int
+) -> DataFrame:
+    """The ``{name}_stats`` manifest row, its totals recomputed FROM the
+    persisted doclens table. Recompute-from-state (not incremental
     reconciliation) is what makes upsert replays converge: however
     many times a crashed batch re-runs its idempotent merges, the
     totals always describe the state actually on disk."""
-    doclens_tbl = f"{name}_doclens_{version_tag}"
     if lake.exists(doclens_tbl):
         totals = (
             lake.read(doclens_tbl)
@@ -228,20 +230,11 @@ def _write_manifest_from_doclens(lake, name: str, version_tag: str, n_buckets: i
         # empty-corpus bootstrap: write_parts of an empty frame
         # leaves a file-less dir
         n_total, s_total = 0, 0
-    manifest = lake.spark.createDataFrame(
-        [
-            (
-                n_total,
-                s_total,
-                f"{name}_postings_{version_tag}",
-                doclens_tbl,
-                n_buckets,
-            )
-        ],
+    return lake.spark.createDataFrame(
+        [(n_total, s_total, postings_tbl, doclens_tbl, n_buckets)],
         "n_docs long, sum_dl long, postings_table string,"
         " doclens_table string, n_buckets int",
     )
-    lake.overwrite(f"{name}_stats", manifest)  # atomic commit
 
 
 def build_text_index(
@@ -264,10 +257,9 @@ def build_text_index(
       id's md5 bucket — one row per document including empty ones;
       the source of truth the manifest totals are computed from.
     - ``{name}_stats``: the index MANIFEST — one row (n_docs, sum_dl,
-      postings_table, doclens_table), written LAST via
-      Lake.overwrite's rotate-swap, the commit point. A failure
-      before it leaves the previous index fully consistent; stale
-      versions are collected by the next successful build.
+      postings_table, doclens_table), committed through
+      ``_lakeindex.commit`` (written last, then the replaced versions
+      are dropped).
 
     Query-term buckets become partition-PRUNED scans: at 100 TB a
     4-term query reads ≤ 4/n_buckets of the postings bytes. The
@@ -276,17 +268,15 @@ def build_text_index(
     """
     _require_unique_ids(docs, id_col)
     doclens, postings = _index_frames(docs, id_col, text_col, n_buckets)
-    prior = lake.tables(f"{name}_postings_v") + lake.tables(f"{name}_doclens_v")
-    version = 1 + max(
-        (int(t.rsplit("_v", 1)[1]) for t in prior if t.rsplit("_v", 1)[1].isdigit()),
-        default=0,
+    tbl, stale = stage(lake, name, ("postings", "doclens"))
+    lake.write_parts(tbl["doclens"], doclens, "bucket")
+    lake.write_parts(tbl["postings"], postings, "bucket")
+    commit(
+        lake,
+        f"{name}_stats",
+        _stats_manifest(lake, tbl["postings"], tbl["doclens"], n_buckets),
+        stale,
     )
-    tag = f"v{version}"
-    lake.write_parts(f"{name}_doclens_{tag}", doclens, "bucket")
-    lake.write_parts(f"{name}_postings_{tag}", postings, "bucket")
-    _write_manifest_from_doclens(lake, name, tag, n_buckets)
-    for stale in prior:
-        lake.drop_table(stale)
 
 
 def query_text_index(
@@ -317,7 +307,7 @@ def query_text_index(
         raise ValueError("query_terms must be non-empty")
     if len(set(query_terms)) != len(query_terms):
         raise ValueError("query_terms must be distinct")
-    m = lake.read(f"{name}_stats").first()
+    m = read_manifest(lake, f"{name}_stats", "query_text_index")[0]
     n_docs, sum_dl = int(m["n_docs"]), int(m["sum_dl"])
     if n_docs == 0 or not lake.exists(m["postings_table"]):
         # empty index (valid bootstrap state), or an index whose docs
@@ -397,9 +387,8 @@ def upsert_text_index(
     re-train.
     """
     _require_unique_ids(new_docs, id_col)
-    m = lake.read(f"{name}_stats").first()
+    m = read_manifest(lake, f"{name}_stats", "upsert_text_index")[0]
     n_buckets = int(m["n_buckets"])
-    tag = m["postings_table"].rsplit("_", 1)[1]
     doclens, postings = _index_frames(new_docs, id_col, text_col, n_buckets)
     lake.merge_replace(m["doclens_table"], doclens, "bucket", "doc_id")
     # postings deletion is driven by the batch's FULL doc-id set
@@ -414,7 +403,11 @@ def upsert_text_index(
         "doc_id",
         keys=doclens.select("doc_id"),
     )
-    _write_manifest_from_doclens(lake, name, tag, n_buckets)
+    commit(
+        lake,
+        f"{name}_stats",
+        _stats_manifest(lake, m["postings_table"], m["doclens_table"], n_buckets),
+    )
 
 
 def tfidf_top_terms(

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from fxa_activity_metrics_spark import cacheutil
+from fxa_activity_metrics_spark.operators._lakeindex import commit, read_manifest, stage
 
 
 def _as_double(col: F.Column) -> F.Column:
@@ -889,13 +890,10 @@ def pq_train_codebooks(
     return books
 
 
-def _cell_ids(
-    corpus: DataFrame, centroids: list[list[float]], id_col: str, vec_col: str
-) -> DataFrame:
-    """(id, cell): each vector's IVF cell, keyed like the PQ tables."""
-    return _assign_cells(corpus, centroids, id_col, vec_col).select(
-        F.col("neighbor_id").alias("id"), "cell"
-    )
+def _cell_ids(assigned: DataFrame) -> DataFrame:
+    """(id, cell) of an ``_assign_cells`` frame, keyed like the PQ
+    tables."""
+    return assigned.select(F.col("neighbor_id").alias("id"), "cell")
 
 
 def _ivfpq_codes(
@@ -913,6 +911,27 @@ def _ivfpq_codes(
         .join(cells, "id")
         .select("id", "cell", F.posexplode("codes").alias("s", "code"))
     )
+
+
+def _ivfpq_tables(
+    corpus: DataFrame,
+    centroids: list[list[float]],
+    codebooks: list[list[list[float]]],
+    id_col: str,
+    vec_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """(codes, vectors): the two cell-partitioned tables of a persisted
+    IVFPQ index over ``corpus``, as built or upserted. The vectors
+    table (id, vec, nrm, cell) is the cell assignment's own projection
+    — one corpus scan, no join back to the corpus."""
+    assigned = _assign_cells(corpus, centroids, id_col, vec_col)
+    vectors = assigned.select(
+        F.col("neighbor_id").alias("id"),
+        F.col("c_vec").alias("vec"),
+        F.col("c_nrm").alias("nrm"),
+        "cell",
+    )
+    return _ivfpq_codes(corpus, _cell_ids(assigned), codebooks, id_col, vec_col), vectors
 
 
 def ivfpq_topk(
@@ -962,7 +981,8 @@ def ivfpq_topk(
     if codebooks is None:
         codebooks = pq_codebooks(corpus, id_col, vec_col, m, n_codes, pq_seed)
     codes = _ivfpq_codes(
-        corpus, _cell_ids(corpus, cents, id_col, vec_col), codebooks, id_col, vec_col
+        corpus, _cell_ids(_assign_cells(corpus, cents, id_col, vec_col)), codebooks,
+        id_col, vec_col,
     )
     # probe cells from the pulled batch via the bit-exact _cell_exprs
     # replica
@@ -1369,16 +1389,12 @@ def ivf_build_index(
 
     - ``{name}_cells_v{N}``: the assigned corpus (neighbor_id, c_vec,
       c_nrm, cell), PARTITIONED BY cell, staged under a fresh version;
-    - ``{name}_centroids``: (cell, centroid, cells_table) — n_cells
-      rows, written LAST via Lake.overwrite's temp-and-swap. The
-      centroids table is the index MANIFEST: its ``cells_table``
-      column names the live cells version, so the swap is the atomic
-      commit point. A failure before it leaves the previous index
-      fully consistent (old centroids still pointing at old cells); a
-      failure after it leaves only an orphaned staging dir, collected
-      by the next successful build. No path ever mixes one build's
-      centroids with another's cells, and no filesystem call leaves
-      the Lake API (works on any Lake backend, not just local disk).
+    - ``{name}_centroids``: (cell, centroid, cells_table, n_vectors)
+      — n_cells rows, the index MANIFEST. Its ``cells_table`` column
+      names the live cells version, and it is committed through
+      ``_lakeindex.commit`` (written last, then the replaced versions
+      are dropped), so no path ever mixes one build's centroids with
+      another's cells.
 
     Because assignments are cell-partition directories, a query's
     n_probe probed cells become partition-PRUNED scans: at 100 TB the
@@ -1404,32 +1420,45 @@ def ivf_build_index(
             trainer, id_col=id_col, vec_col=vec_col,
             n_cells=n_cells, seed=seed,
         )
-    spark = corpus.sparkSession
-    prior = lake.tables(f"{name}_cells_v")
-    version = 1 + max(
-        (int(t.rsplit("_v", 1)[1]) for t in prior if t.rsplit("_v", 1)[1].isdigit()),
-        default=0,
+    tbl, stale = stage(lake, name, ("cells",))
+    lake.write_parts(tbl["cells"], _assign_cells(corpus, centroids, id_col, vec_col), "cell")
+    _commit_centroids(
+        lake, name, centroids, lake.read(tbl["cells"]).count(), stale,
+        cells_table=tbl["cells"],
     )
-    cells_tbl = f"{name}_cells_v{version}"
-    lake.write_parts(cells_tbl, _assign_cells(corpus, centroids, id_col, vec_col), "cell")
-    # corpus size goes INTO the manifest so filtered queries compute
-    # selectivity from a bounded driver-side read instead of a count
-    # job over the cells table per call (VERDICT r12 item 3) — a
-    # footer-only count here, paid once at build time
-    n_vectors = lake.read(cells_tbl).count()
-    cents_df = spark.createDataFrame(
-        [(i, list(cv), cells_tbl, n_vectors) for i, cv in enumerate(centroids)],
-        "cell int, centroid array<double>, cells_table string, n_vectors long",
+
+
+def _read_centroids(lake, name: str, fn_name: str):
+    """(centroids in cell order, manifest head row) of an IVF/IVFPQ
+    ``{name}_centroids`` manifest — the one reader of it."""
+    rows = sorted(read_manifest(lake, f"{name}_centroids", fn_name), key=lambda r: r["cell"])
+    return [list(r["centroid"]) for r in rows], rows[0]
+
+
+def _commit_centroids(
+    lake, name: str, centroids, n_vectors: int, stale=(), **tables: str
+) -> None:
+    """Commit the ``{name}_centroids`` manifest — the one writer of it:
+    one row per cell carrying its centroid, the ``tables`` of the live
+    build (``cells_table`` for IVF; ``codes_table``, ``vectors_table``
+    and ``codebooks_table`` for IVFPQ) and the corpus size
+    ``n_vectors``. The size lives in the manifest so filtered queries
+    compute selectivity from this bounded driver-side read instead of
+    a count job per call (VERDICT r12 item 3); builds count the
+    footers of the table they just wrote, upserts add the merge's row
+    delta."""
+    df = lake.spark.createDataFrame(
+        [(i, list(cv), *tables.values(), n_vectors) for i, cv in enumerate(centroids)],
+        "cell int, centroid array<double>, "
+        + "".join(f"{t} string, " for t in tables)
+        + "n_vectors long",
     )
-    lake.overwrite(f"{name}_centroids", cents_df)  # atomic commit
-    for stale in prior:
-        lake.drop_table(stale)
+    commit(lake, f"{name}_centroids", df, stale)
 
 
 def ivf_cells_table(lake, name: str = "ivf") -> str:
     """Resolve the live cells table from the centroids manifest."""
-    row = lake.read(f"{name}_centroids").select("cells_table").first()
-    return row["cells_table"]
+    return _read_centroids(lake, name, "ivf_cells_table")[1]["cells_table"]
 
 
 def ivf_upsert_index(
@@ -1447,31 +1476,14 @@ def ivf_upsert_index(
     changed (Lake.merge_replace's moved-key handling). Centroids are
     not re-trained; run ``ivf_build_index`` for that.
     """
-    crows = sorted(
-        _read_manifest(lake, f"{name}_centroids", "ivf_upsert_index"),
-        key=lambda r: r["cell"],
+    centroids, head = _read_centroids(lake, name, "ivf_upsert_index")
+    cells_tbl = head["cells_table"]
+    n_prior = _manifest_n_vectors(lake, head, "cells_table")
+    delta = lake.merge_replace(
+        cells_tbl, _assign_cells(new_vectors, centroids, id_col, vec_col),
+        "cell", "neighbor_id",
     )
-    centroids = [list(r["centroid"]) for r in crows]
-    assigned = _assign_cells(new_vectors, centroids, id_col, vec_col)
-    cells_tbl = crows[0]["cells_table"]
-    delta = lake.merge_replace(cells_tbl, assigned, "cell", "neighbor_id")
-    # refresh the manifest's corpus count arithmetically: prior total
-    # + the merge's partition-pruned row delta — O(touched cells), not
-    # an O(corpus) re-count per upsert (full count only for pre-r13
-    # manifests that lack n_vectors). A crash between the merge and
-    # this overwrite leaves a stale n_vectors, which only skews the
-    # auto_probe heuristic — the next upsert or build self-heals it
-    prior_n = crows[0].asDict().get("n_vectors")
-    n_vectors = (
-        prior_n + delta if prior_n is not None else lake.read(cells_tbl).count()
-    )
-    lake.overwrite(
-        f"{name}_centroids",
-        new_vectors.sparkSession.createDataFrame(
-            [(r["cell"], list(r["centroid"]), cells_tbl, n_vectors) for r in crows],
-            "cell int, centroid array<double>, cells_table string, n_vectors long",
-        ),
-    )
+    _commit_centroids(lake, name, centroids, n_prior + delta, cells_table=cells_tbl)
 
 
 def _one_col(candidate_ids: DataFrame) -> str:
@@ -1511,15 +1523,16 @@ def _escalate_probes(
     return max(n_probe, min(n_cells, math.ceil(n_probe / max(s, 1e-12))))
 
 
-def _manifest_n_vectors(lake, crows, table_key: str) -> int:
-    """Corpus size for selectivity, from the index manifest when the
+def _manifest_n_vectors(lake, head, table_key: str) -> int:
+    """Corpus size from the centroid manifest's head row when the
     build recorded it (every build/upsert since r13 does); counting
-    the index table is the legacy-manifest fallback only — never a
-    per-query cost on a current index."""
-    row = crows[0]
-    if "n_vectors" in row.__fields__ and row["n_vectors"] is not None:
-        return row["n_vectors"]
-    return lake.read(row[table_key]).count()
+    the ``table_key`` table is the legacy-manifest fallback only.
+    Upserts add their merge's partition-pruned row delta to it — a
+    crash before their commit only skews auto_probe until the next
+    upsert or build."""
+    if "n_vectors" in head.__fields__ and head["n_vectors"] is not None:
+        return head["n_vectors"]
+    return lake.read(head[table_key]).count()
 
 
 def _validate_candidate_subset(
@@ -1605,16 +1618,53 @@ def ivf_query_index(
     FILTERED_RECALL.json; floor pinned in tests). No effect on
     unfiltered queries or full-probe calls.
     """
-    crows = sorted(
-        _read_manifest(lake, f"{name}_centroids", "ivf_query_index"),
-        key=lambda r: r["cell"],
-    )
-    centroids = [list(r["centroid"]) for r in crows]
-    cells_tbl = crows[0]["cells_table"]
-    if candidate_ids is not None and validate_candidates:
-        _validate_candidate_subset(
-            lake, candidate_ids, cells_tbl, "neighbor_id", "ivf_query_index"
+    def score(head, cells, qids, qmat, qrows):
+        # the query frame is a local relation carrying the replica's
+        # driver-side norms
+        q = queries.sparkSession.createDataFrame(
+            [
+                (qi, [float(x) for x in qv], qn, int(c))
+                for (qi, qn, probed), qv in zip(qrows, qmat)
+                for c in probed
+            ],
+            "query_id long, q_vec array<double>, q_nrm double, cell int",
         )
+        return _exact_topk(
+            cells.join(q, "cell").filter(F.col("query_id") != F.col("neighbor_id")), k
+        )
+
+    return _probe_index(
+        lake, queries, name, "ivf_query_index", n_probe, id_col, vec_col,
+        candidate_ids, broadcast_filter, auto_probe, validate_candidates,
+        scan_key="cells_table", vectors_key="cells_table", id_name="neighbor_id",
+        score=score,
+    )
+
+
+def _probe_index(
+    lake, queries: DataFrame, name: str, fn_name: str, n_probe: int,
+    id_col: str, vec_col: str, candidate_ids: DataFrame | None,
+    broadcast_filter: bool, auto_probe: bool, validate_candidates: bool,
+    *, scan_key: str, vectors_key: str, id_name: str, score,
+) -> DataFrame:
+    """The probe step shared by ``ivf_query_index`` and
+    ``ivfpq_query_index``: read the centroid manifest, (opt-in)
+    validate ``candidate_ids``, escalate the probe count for a
+    selective filter, pull the query batch and pick each query's
+    probe cells driver-side with the bit-exact ``_cell_exprs`` replica,
+    then read ONLY the probed cell partitions of the manifest's
+    ``scan_key`` table (isin over the partition column → partition
+    pruning), semi-filtered to the allowed ids on ``id_name``.
+
+    ``vectors_key`` names the one-row-per-vector table that foreign
+    ids are checked against and that legacy manifests count. The
+    caller's ``score(head, scan, qids, qmat, qrows)`` builds its result
+    from the manifest head row, the pruned scan, the pulled query
+    batch and the replica's [(query_id, q_nrm, [cell, ...])]; an empty
+    batch returns the empty top-k frame without calling it."""
+    centroids, head = _read_centroids(lake, name, fn_name)
+    if candidate_ids is not None and validate_candidates:
+        _validate_candidate_subset(lake, candidate_ids, head[vectors_key], id_name, fn_name)
     if candidate_ids is not None and auto_probe and n_probe < len(centroids):
         # candidate_ids must be a SUBSET of indexed ids: stale/foreign
         # ids inflate n_allowed, overstate selectivity, and
@@ -1626,31 +1676,19 @@ def ivf_query_index(
             n_probe,
             len(centroids),
             candidate_ids.select(_one_col(candidate_ids)).distinct().count(),
-            _manifest_n_vectors(lake, crows, "cells_table"),
+            _manifest_n_vectors(lake, head, vectors_key),
         )
-    # probe cells and norms are computed driver-side by the bit-exact
-    # _cell_exprs replica, then the query frame is a local relation
     qids, qmat = _query_batch(queries, id_col, vec_col)
     qrows = _nearest_cells_rows(qids, qmat, centroids, n_probe)
-    q = queries.sparkSession.createDataFrame(
-        [
-            (qi, [float(x) for x in qv], qn, int(c))
-            for (qi, qn, cells), qv in zip(qrows, qmat)
-            for c in cells
-        ],
-        "query_id long, q_vec array<double>, q_nrm double, cell int",
-    )
     probed = sorted({int(c) for _, _, cells in qrows for c in cells})
     if not probed:
         # empty query batch: isin() with zero args would raise
         return queries.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, rank int, cosine double"
         )
-    c = lake.read(cells_tbl).filter(F.col("cell").isin(*[F.lit(p) for p in probed]))
-    c = _semi_filter(c, candidate_ids, "neighbor_id", broadcast_filter)
-    return _exact_topk(
-        c.join(q, "cell").filter(F.col("query_id") != F.col("neighbor_id")), k
-    )
+    scan = lake.read(head[scan_key]).filter(F.col("cell").isin(*[F.lit(p) for p in probed]))
+    scan = _semi_filter(scan, candidate_ids, id_name, broadcast_filter)
+    return score(head, scan, qids, qmat, qrows)
 
 
 def lsh_topk(
@@ -2239,11 +2277,9 @@ def pq_build_index(
     - ``{name}_vectors_v{N}``: (id, vec, nrm) — the exact-rerank side
       with norms precomputed at build time;
     - ``{name}_codebooks``: (s, j, codeword, codes_table,
-      vectors_table) — m × n_codes rows written LAST via
-      Lake.overwrite's temp-and-swap, the index MANIFEST and atomic
-      commit point (a failure before it leaves the previous index
-      fully consistent; no path mixes one build's codebooks with
-      another's codes).
+      vectors_table) — m × n_codes rows, the index MANIFEST,
+      committed through ``_lakeindex.commit`` (written last, then the
+      replaced versions are dropped).
 
     Build cost: the codebook job + ONE encode scan of the corpus,
     paid once offline — queries then never re-derive codebooks or
@@ -2253,51 +2289,36 @@ def pq_build_index(
     """
     if codebooks is None:
         codebooks = pq_codebooks(corpus, id_col, vec_col, m, n_codes, seed)
-    spark = corpus.sparkSession
-    prior = lake.tables(f"{name}_codes_v")
-    version = 1 + max(
-        (int(t.rsplit("_v", 1)[1]) for t in prior if t.rsplit("_v", 1)[1].isdigit()),
-        default=0,
-    )
-    codes_tbl = f"{name}_codes_v{version}"
-    vecs_tbl = f"{name}_vectors_v{version}"
+    tbl, stale = stage(lake, name, ("codes", "vectors"))
     lake.overwrite(
-        codes_tbl,
+        tbl["codes"],
         pq_encode(corpus, codebooks, id_col, vec_col).select(
             "id", F.posexplode("codes").alias("s", "code")
         ),
     )
-    lake.overwrite(vecs_tbl, _pq_base(corpus, id_col, vec_col))
-    manifest = spark.createDataFrame(
+    lake.overwrite(tbl["vectors"], _pq_base(corpus, id_col, vec_col))
+    commit(
+        lake,
+        f"{name}_codebooks",
+        _codebook_frame(
+            lake, codebooks, codes_table=tbl["codes"], vectors_table=tbl["vectors"]
+        ),
+        stale,
+    )
+
+
+def _codebook_frame(lake, codebooks, **tables: str) -> DataFrame:
+    """(s, j, codeword, *tables): one row per codeword — the rows
+    ``_manifest_codebooks`` decodes."""
+    return lake.spark.createDataFrame(
         [
-            (s, j, list(cw), codes_tbl, vecs_tbl)
+            (s, j, list(cw), *tables.values())
             for s, book in enumerate(codebooks)
             for j, cw in enumerate(book)
         ],
-        "s int, j int, codeword array<double>, codes_table string, "
-        "vectors_table string",
+        "s int, j int, codeword array<double>"
+        + "".join(f", {t} string" for t in tables),
     )
-    lake.overwrite(f"{name}_codebooks", manifest)
-
-
-def _read_manifest(lake, table: str, index_name: str) -> list:
-    """Read an index manifest table loudly: a never-built index must
-    fail with a ValueError naming the missing table, not an opaque
-    IndexError on rows[0] / a raw lake read error (the same loud-guard
-    contract as pq_codebooks' empty-corpus checks)."""
-    try:
-        rows = lake.read(table).collect()
-    except Exception as exc:
-        raise ValueError(
-            f"{index_name}: manifest table '{table}' is missing — build "
-            f"the index first (no prior *_build_index run?)"
-        ) from exc
-    if not rows:
-        raise ValueError(
-            f"{index_name}: manifest table '{table}' is empty — the "
-            f"index build did not commit"
-        )
-    return rows
 
 
 def pq_query_index(
@@ -2317,7 +2338,7 @@ def pq_query_index(
     function of codebooks + corpus, so the persisted stream IS the
     in-session stream; pinned in tests/test_ivf_index.py's PQ twin).
     """
-    mrows = _read_manifest(lake, f"{name}_codebooks", "pq_query_index")
+    mrows = read_manifest(lake, f"{name}_codebooks", "pq_query_index")
     qids, qmat = _query_batch(queries, id_col, vec_col)
     return _adc_rerank(
         lake.read(mrows[0]["codes_table"]),
@@ -2350,53 +2371,25 @@ def ivfpq_build_index(
       side, touched only for the shortlist;
     - ``{name}_codebooks_v{N}``: the PQ manifest half;
     - ``{name}_centroids``: (cell, centroid, codes_table,
-      vectors_table, codebooks_table) written LAST via temp-and-swap
-      — the atomic commit point naming every other table of its
-      build (the ivf_build_index manifest contract).
+      vectors_table, codebooks_table, n_vectors) — the manifest naming
+      every other table of its build, committed like
+      ``ivf_build_index``'s.
 
-    Cell assignment and PQ encoding are ONE corpus scan each, paid at
-    build time; queries re-derive nothing.
+    Cell assignment and PQ encoding are paid at build time; queries
+    re-derive nothing.
     """
     cents = ivf_centroids(corpus, id_col, vec_col, n_cells, seed)
     if codebooks is None:
         codebooks = pq_codebooks(corpus, id_col, vec_col, m, n_codes, pq_seed)
-    spark = corpus.sparkSession
-    prior = lake.tables(f"{name}_codes_v")
-    version = 1 + max(
-        (int(t.rsplit("_v", 1)[1]) for t in prior if t.rsplit("_v", 1)[1].isdigit()),
-        default=0,
-    )
-    codes_tbl = f"{name}_codes_v{version}"
-    vecs_tbl = f"{name}_vectors_v{version}"
-    books_tbl = f"{name}_codebooks_v{version}"
-    cells = _cell_ids(corpus, cents, id_col, vec_col)
-    lake.write_parts(
-        codes_tbl, _ivfpq_codes(corpus, cells, codebooks, id_col, vec_col), "cell"
-    )
-    lake.write_parts(vecs_tbl, _pq_base(corpus, id_col, vec_col).join(cells, "id"), "cell")
-    lake.overwrite(
-        books_tbl,
-        spark.createDataFrame(
-            [
-                (s, j, list(cw))
-                for s, book in enumerate(codebooks)
-                for j, cw in enumerate(book)
-            ],
-            "s int, j int, codeword array<double>",
-        ),
-    )
-    # corpus size into the manifest — see ivf_build_index
-    n_vectors = lake.read(vecs_tbl).count()
-    lake.overwrite(
-        f"{name}_centroids",
-        spark.createDataFrame(
-            [
-                (i, list(cv), codes_tbl, vecs_tbl, books_tbl, n_vectors)
-                for i, cv in enumerate(cents)
-            ],
-            "cell int, centroid array<double>, codes_table string, "
-            "vectors_table string, codebooks_table string, n_vectors long",
-        ),
+    tbl, stale = stage(lake, name, ("codes", "vectors", "codebooks"))
+    codes, vectors = _ivfpq_tables(corpus, cents, codebooks, id_col, vec_col)
+    lake.write_parts(tbl["codes"], codes, "cell")
+    lake.write_parts(tbl["vectors"], vectors, "cell")
+    lake.overwrite(tbl["codebooks"], _codebook_frame(lake, codebooks))
+    _commit_centroids(
+        lake, name, cents, lake.read(tbl["vectors"]).count(), stale,
+        codes_table=tbl["codes"], vectors_table=tbl["vectors"],
+        codebooks_table=tbl["codebooks"],
     )
 
 
@@ -2433,47 +2426,25 @@ def ivfpq_query_index(
     (``_escalate_probes``) — same rationale and recall evidence as
     ivf_query_index (FILTERED_RECALL.json).
     """
-    crows = sorted(
-        _read_manifest(lake, f"{name}_centroids", "ivfpq_query_index"),
-        key=lambda r: r["cell"],
-    )
-    cents = [list(r["centroid"]) for r in crows]
-    codes_tbl = crows[0]["codes_table"]
-    vecs_tbl = crows[0]["vectors_table"]
-    codebooks = _manifest_codebooks(
-        _read_manifest(lake, crows[0]["codebooks_table"], "ivfpq_query_index")
-    )
-    if candidate_ids is not None and validate_candidates:
-        _validate_candidate_subset(
-            lake, candidate_ids, vecs_tbl, "id", "ivfpq_query_index"
+    def score(head, codes, qids, qmat, qrows):
+        probes = queries.sparkSession.createDataFrame(
+            [(qi, int(c)) for qi, _, cells in qrows for c in cells],
+            "query_id long, cell int",
         )
-    if candidate_ids is not None and auto_probe and n_probe < len(cents):
-        # subset contract + manifest-count rationale: see ivf_query_index
-        n_probe = _escalate_probes(
-            n_probe,
-            len(cents),
-            candidate_ids.select(_one_col(candidate_ids)).distinct().count(),
-            _manifest_n_vectors(lake, crows, "vectors_table"),
+        codebooks = _manifest_codebooks(
+            read_manifest(lake, head["codebooks_table"], "ivfpq_query_index")
         )
-    session = queries.sparkSession
-    # probe cells come from the bit-exact _cell_exprs replica
-    qids, qmat = _query_batch(queries, id_col, vec_col)
-    if not len(qids):
-        return session.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int, cosine double"
+        return _adc_rerank(
+            codes.join(F.broadcast(probes), "cell"),
+            lake.read(head["vectors_table"]),
+            codebooks, qids, qmat, k, shortlist_factor,
         )
-    qrows = _nearest_cells_rows(qids, qmat, cents, n_probe)
-    probes = session.createDataFrame(
-        [(qi, int(c)) for qi, _, cells in qrows for c in cells],
-        "query_id long, cell int",
-    )
-    probed_cells = sorted({int(c) for _, _, cells in qrows for c in cells})
-    codes = lake.read(codes_tbl).filter(F.col("cell").isin(probed_cells))
-    codes = _semi_filter(codes, candidate_ids, "id", broadcast_filter)
-    return _adc_rerank(
-        codes.join(F.broadcast(probes), "cell"),
-        lake.read(vecs_tbl),
-        codebooks, qids, qmat, k, shortlist_factor,
+
+    return _probe_index(
+        lake, queries, name, "ivfpq_query_index", n_probe, id_col, vec_col,
+        candidate_ids, broadcast_filter, auto_probe, validate_candidates,
+        scan_key="codes_table", vectors_key="vectors_table", id_name="id",
+        score=score,
     )
 
 
@@ -2496,40 +2467,13 @@ def ivfpq_upsert_index(
     standard IVFPQ drift trade — rebuild cadence is the operator's
     knob, not this function's).
     """
-    crows = sorted(
-        _read_manifest(lake, f"{name}_centroids", "ivfpq_upsert_index"),
-        key=lambda r: r["cell"],
-    )
-    cents = [list(r["centroid"]) for r in crows]
-    codes_tbl = crows[0]["codes_table"]
-    vecs_tbl = crows[0]["vectors_table"]
-    books_tbl = crows[0]["codebooks_table"]
+    cents, head = _read_centroids(lake, name, "ivfpq_upsert_index")
+    tables = {t: head[t] for t in ("codes_table", "vectors_table", "codebooks_table")}
     codebooks = _manifest_codebooks(
-        _read_manifest(lake, books_tbl, "ivfpq_upsert_index")
+        read_manifest(lake, tables["codebooks_table"], "ivfpq_upsert_index")
     )
-    cells = _cell_ids(new_vectors, cents, id_col, vec_col)
-    lake.merge_replace(
-        codes_tbl, _ivfpq_codes(new_vectors, cells, codebooks, id_col, vec_col),
-        "cell", "id",
-    )
-    delta = lake.merge_replace(
-        vecs_tbl, _pq_base(new_vectors, id_col, vec_col).join(cells, "id"), "cell", "id"
-    )
-    # refresh the manifest's corpus count — see ivf_upsert_index
-    # (prior total + partition-pruned merge delta, no O(corpus) count)
-    prior_n = crows[0].asDict().get("n_vectors")
-    n_vectors = (
-        prior_n + delta if prior_n is not None else lake.read(vecs_tbl).count()
-    )
-    lake.overwrite(
-        f"{name}_centroids",
-        new_vectors.sparkSession.createDataFrame(
-            [
-                (r["cell"], list(r["centroid"]), codes_tbl, vecs_tbl,
-                 books_tbl, n_vectors)
-                for r in crows
-            ],
-            "cell int, centroid array<double>, codes_table string, "
-            "vectors_table string, codebooks_table string, n_vectors long",
-        ),
-    )
+    n_prior = _manifest_n_vectors(lake, head, "vectors_table")
+    codes, vectors = _ivfpq_tables(new_vectors, cents, codebooks, id_col, vec_col)
+    lake.merge_replace(tables["codes_table"], codes, "cell", "id")
+    delta = lake.merge_replace(tables["vectors_table"], vectors, "cell", "id")
+    _commit_centroids(lake, name, cents, n_prior + delta, **tables)

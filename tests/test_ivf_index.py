@@ -313,6 +313,12 @@ def test_pq_rebuild_swaps_manifest(spark, tmp_path):
     pq_build_index(lake, emb, m=4, n_codes=16)
     second = lake.read("pq_codebooks").collect()[0]["codes_table"]
     assert first != second  # fresh version staged, manifest re-pointed
+    # the commit dropped the replaced version: only the live codes /
+    # vectors pair and the manifest remain
+    m = lake.read("pq_codebooks").first()
+    assert lake.tables("pq_") == sorted(
+        ["pq_codebooks", m["codes_table"], m["vectors_table"]]
+    )
     out = pq_query_index(lake, emb.filter(F.col("vec_id") < 5), k=3)
     assert out.count() > 0
 
@@ -352,6 +358,30 @@ def test_ivfpq_persisted_query_equals_fresh(ivfpq_env, spark):
         shortlist_factor=8,
     ).collect()
     assert sorted(map(tuple, via_index)) == sorted(map(tuple, fresh))
+
+
+def test_ivfpq_rebuild_drops_stale_versions(spark, tmp_path):
+    """A rebuild stages a fresh version of all three IVFPQ tables,
+    re-points the centroids manifest at them, and drops the versions
+    it replaced."""
+    from pyspark.sql import functions as F
+
+    from fxa_activity_metrics_spark.operators.similarity import (
+        ivfpq_build_index,
+        ivfpq_query_index,
+    )
+
+    lake = Lake(spark, str(tmp_path / "ivfpq_lake2"))
+    emb = read_table(spark, SF, "embeddings").filter(F.col("vec_id") < 200)
+    ivfpq_build_index(lake, emb, n_cells=4, m=4, n_codes=16)
+    first = lake.read("ivfpq_centroids").first()
+    ivfpq_build_index(lake, emb, n_cells=4, m=4, n_codes=16)
+    m = lake.read("ivfpq_centroids").first()
+    live = [m["codes_table"], m["vectors_table"], m["codebooks_table"]]
+    assert first["codes_table"] not in live
+    assert lake.tables("ivfpq_") == sorted(["ivfpq_centroids", *live])
+    out = ivfpq_query_index(lake, emb.filter(F.col("vec_id") < 5), k=3, n_probe=2)
+    assert out.count() > 0
 
 
 def test_ivfpq_code_scan_is_partition_pruned(ivfpq_env, spark):
@@ -561,6 +591,56 @@ def test_escalate_probes_arithmetic():
     assert _escalate_probes(2, 16, 0, 1000) == 16
     # never BELOW the caller's n_probe
     assert _escalate_probes(8, 16, 1000, 1000) == 8
+
+
+def test_driver_probe_replica_matches_jvm_nearest_cells(spark):
+    """Both index query paths probe with ``_nearest_cells_rows``, the
+    driver replica of the JVM ``_cell_exprs`` closure the in-session
+    paths and builds assign with: the probe lists must be equal —
+    over random vectors, on an exact tie (duplicate centroids: the
+    higher cell first, the lower second) and at n == n_cells."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    from fxa_activity_metrics_spark.operators.similarity import (
+        _cell_exprs,
+        _nearest_cells_rows,
+        norm,
+    )
+
+    rng = random.Random(11)
+    dim = 8
+    cents = [[rng.uniform(-1, 1) for _ in range(dim)] for _ in range(6)]
+    cents.append(list(cents[2]))  # cell 6 ties cell 2 exactly
+    qmat = [[rng.uniform(-1, 1) for _ in range(dim)] for _ in range(40)]
+    qmat.append(list(cents[2]))
+    qids = list(range(len(qmat)))
+    q = spark.createDataFrame(
+        list(zip(qids, qmat)), "query_id long, q_vec array<double>"
+    )
+    nearest = _cell_exprs(cents)
+    for n in (1, 3, len(cents)):
+        jvm = {
+            r["query_id"]: list(r["cells"])
+            for r in q.select(
+                "query_id",
+                nearest(F.col("q_vec"), norm(F.col("q_vec")), n).alias("cells"),
+            ).collect()
+        }
+        driver = {qi: cells for qi, _, cells in _nearest_cells_rows(qids, qmat, cents, n)}
+        assert driver == jvm, n
+    for cells in driver.values():
+        assert cells.index(6) + 1 == cells.index(2)
+
+    # a zero-norm query divides by zero on both sides
+    zero = [[0.0] * dim]
+    with pytest.raises(ZeroDivisionError):
+        _nearest_cells_rows([0], zero, cents, 1)
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        spark.createDataFrame([(0, zero[0])], "query_id long, q_vec array<double>").select(
+            nearest(F.col("q_vec"), norm(F.col("q_vec")), 1)
+        ).collect()
 
 
 def test_filtered_partial_probe_recall_floor(env, spark):
