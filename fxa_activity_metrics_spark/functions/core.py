@@ -101,6 +101,22 @@ def empty_backfill(current: Column | str, fallback: Column | str) -> Column:
     return F.when(cur == "", fb).otherwise(cur)
 
 
+def empty_strings(df: DataFrame) -> DataFrame:
+    """Missing CSV fields read as '' — never NULL — the reference's
+    missing-value sentinel (P4, SURVEY §7 trap 2): every NULL in a
+    string column (a short row's absent trailing fields) becomes ''.
+    The batch day-file read and the streaming twins apply this same
+    boundary, so their tables agree on every blank field."""
+    return df.select(
+        *[
+            F.coalesce(F.col(f.name), F.lit("")).alias(f.name)
+            if f.dataType.typeName() == "string"
+            else F.col(f.name)
+            for f in df.schema.fields
+        ]
+    )
+
+
 def truncate_columns(df: DataFrame, max_lengths: dict[str, int]) -> DataFrame:
     """Emulate Redshift `TRUNCATECOLUMNS` (import_events.py:96):
     over-length string values are truncated on load, never rejected.

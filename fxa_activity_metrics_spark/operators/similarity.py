@@ -623,6 +623,7 @@ def pq_encode(
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """PQ encoding: per subspace, the index of the L2-nearest codeword
     (ties → smallest index) — m small integers per vector instead of
@@ -639,14 +640,19 @@ def pq_encode(
     (((t₀)+t₁)+t₂)+t₃ matches the JVM fold with 0.0 init and DuckDB's
     list_sum term order, and np.argmin's first-minimum rule IS the
     ties→smallest-index contract. Partition-preserving, zero shuffle.
-    Output: (id, codes array<int>)."""
+    Output: (id, *keep, codes array<int>) — ``keep`` columns of
+    ``corpus`` ride through the kernel unchanged."""
     import numpy as np
 
     m = len(codebooks)
     sub_len = len(codebooks[0][0])
     books = np.array(codebooks, dtype=np.float64)
     sel = corpus.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("_v")
+        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("_v"), *keep
+    )
+    out_schema = ", ".join(
+        ["id long", *(f"{c} {sel.schema[c].dataType.simpleString()}" for c in keep),
+         "codes array<int>"]
     )
 
     def kernel(batches):
@@ -667,10 +673,11 @@ def pq_encode(
                     d = d + t * t
                 codes[:, s] = np.argmin(d, axis=1)
             yield pd.DataFrame(
-                {"id": pdf["id"].to_numpy(np.int64), "codes": list(codes)}
+                {"id": pdf["id"].to_numpy(np.int64),
+                 **{c: pdf[c].to_numpy() for c in keep}, "codes": list(codes)}
             )
 
-    return sel.mapInPandas(kernel, "id long, codes array<int>")
+    return sel.mapInPandas(kernel, out_schema)
 
 
 def _pq_lut_from(session, qids, qmat, codebooks) -> DataFrame:
@@ -890,27 +897,10 @@ def pq_train_codebooks(
     return books
 
 
-def _cell_ids(assigned: DataFrame) -> DataFrame:
-    """(id, cell) of an ``_assign_cells`` frame, keyed like the PQ
-    tables."""
-    return assigned.select(F.col("neighbor_id").alias("id"), "cell")
-
-
-def _ivfpq_codes(
-    corpus: DataFrame,
-    cells: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """(id, cell, s, code): the IVFPQ code stream — ``corpus``'s PQ
-    codes tagged with its ``_cell_ids`` — whether scanned in session,
-    built or upserted."""
-    return (
-        pq_encode(corpus, codebooks, id_col, vec_col)
-        .join(cells, "id")
-        .select("id", "cell", F.posexplode("codes").alias("s", "code"))
-    )
+def _code_rows(encoded: DataFrame) -> DataFrame:
+    """(id, cell, s, code): the IVFPQ code stream of a cell-tagged
+    ``pq_encode`` output."""
+    return encoded.select("id", "cell", F.posexplode("codes").alias("s", "code"))
 
 
 def _ivfpq_tables(
@@ -923,7 +913,8 @@ def _ivfpq_tables(
     """(codes, vectors): the two cell-partitioned tables of a persisted
     IVFPQ index over ``corpus``, as built or upserted. The vectors
     table (id, vec, nrm, cell) is the cell assignment's own projection
-    — one corpus scan, no join back to the corpus."""
+    and the codes table encodes that same assigned frame, its cell
+    riding through the kernel — each one corpus scan, no join."""
     assigned = _assign_cells(corpus, centroids, id_col, vec_col)
     vectors = assigned.select(
         F.col("neighbor_id").alias("id"),
@@ -931,7 +922,8 @@ def _ivfpq_tables(
         F.col("c_nrm").alias("nrm"),
         "cell",
     )
-    return _ivfpq_codes(corpus, _cell_ids(assigned), codebooks, id_col, vec_col), vectors
+    codes = pq_encode(assigned, codebooks, "neighbor_id", "c_vec", keep=("cell",))
+    return _code_rows(codes), vectors
 
 
 def ivfpq_topk(
@@ -980,10 +972,10 @@ def ivfpq_topk(
     )
     if codebooks is None:
         codebooks = pq_codebooks(corpus, id_col, vec_col, m, n_codes, pq_seed)
-    codes = _ivfpq_codes(
-        corpus, _cell_ids(_assign_cells(corpus, cents, id_col, vec_col)), codebooks,
-        id_col, vec_col,
+    cells = _assign_cells(corpus, cents, id_col, vec_col).select(
+        F.col("neighbor_id").alias("id"), "cell"
     )
+    codes = _code_rows(pq_encode(corpus, codebooks, id_col, vec_col).join(cells, "id"))
     # probe cells from the pulled batch via the bit-exact _cell_exprs
     # replica
     qids, qmat = _query_batch(queries, id_col, vec_col)

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fxa_activity_metrics_spark import cacheutil
-from fxa_activity_metrics_spark.functions.core import truncate_columns
+from fxa_activity_metrics_spark.functions.core import empty_strings, truncate_columns
 
 # Injection patterns rejected by clean-flow-data.sh:20-45. One regex
 # alternation over the raw line; case-insensitive to match `grep -i`.
@@ -111,17 +111,9 @@ def read_day_csv(
         raise ValueError(
             f"CSV load of {path}: {bad} corrupt rows exceeds MAXERROR={max_errors}"
         )
-    good = df.filter(F.col(_CORRUPT).isNull()).drop(_CORRUPT)
     # pad-flow-data.sh:19 semantics: short rows were null-filled by
     # PERMISSIVE mode; restore the empty-string sentinel.
-    good = good.select(
-        *[
-            F.coalesce(F.col(f.name), F.lit("")).alias(f.name)
-            if f.dataType.typeName() == "string"
-            else F.col(f.name)
-            for f in schema.fields
-        ]
-    )
+    good = empty_strings(df.filter(F.col(_CORRUPT).isNull()).drop(_CORRUPT))
     if max_lengths:
         good = truncate_columns(good, max_lengths)
     return good

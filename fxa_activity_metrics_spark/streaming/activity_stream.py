@@ -9,9 +9,6 @@ straggler filter (rows outside the file's day are dropped,
 import_events.py:118) and the idempotent day sink (dynamic partition
 overwrite) behave byte-for-byte like the batch path. Cohort sampling
 fans the same batch into the three sampled lake variants.
-
-Checkpointing makes re-runs exactly-once at the partition level: a
-replayed file overwrites its own day partition with identical rows.
 """
 
 from __future__ import annotations
@@ -19,10 +16,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fxa_activity_metrics_spark.functions.core import day_of, sample_cohort, ts_from_epoch
+from fxa_activity_metrics_spark.functions.core import (
+    day_of,
+    empty_strings,
+    sample_cohort,
+    ts_from_epoch,
+)
 from fxa_activity_metrics_spark.schemas import ACTIVITY, Dataset, SAMPLE_RATES
 from fxa_activity_metrics_spark.sources.lake import Lake
-from fxa_activity_metrics_spark import cacheutil
+from fxa_activity_metrics_spark.streaming._drain import drain
 
 _FILE_DAY_RE = r"([0-9]{4}-[0-9]{2}-[0-9]{2})\.csv$"
 
@@ -38,22 +40,13 @@ def read_dataset_stream(
         # only this dataset's day-files — drop dirs hold several
         # datasets (the batch driver filters by prefix the same way)
         .option("pathGlobFilter", f"{dataset.csv_prefix}-*.csv")
-        # '' stays '' — the reference's missing-value sentinel (same
-        # options as the batch read_day_csv; SURVEY §7 trap 2)
+        # '' stays '' — the same options as the batch read_day_csv
         .option("emptyValue", "")
         .csv(source_dir)
     )
-    # residual NULLs (absent trailing fields) back to the sentinel
-    raw = raw.select(
-        *[
-            F.coalesce(F.col(f.name), F.lit("")).alias(f.name)
-            if f.dataType.typeName() == "string"
-            else F.col(f.name)
-            for f in dataset.csv_schema.fields
-        ]
-    )
     return (
-        raw.withColumn("timestamp", ts_from_epoch("timestamp"))
+        empty_strings(raw)
+        .withColumn("timestamp", ts_from_epoch("timestamp"))
         .withColumn("day", day_of("timestamp"))
         .withColumn(
             "_file_day",
@@ -70,32 +63,20 @@ def run_dataset_import_stream(
     dataset: Dataset = ACTIVITY,
 ):
     """source stream → straggler filter → 3 sampled day-partition
-    sinks. Returns the started query (availableNow)."""
-    events = read_dataset_stream(spark, source_dir, dataset)
+    sinks. Returns the started query."""
+    # reference straggler filter: keep rows whose UTC day == the day
+    # encoded in the source filename (import_events.py:118); on the
+    # stream, so a batch of stragglers only is an empty batch
+    day_rows = read_dataset_stream(spark, source_dir, dataset).filter(
+        F.col("day") == F.col("_file_day")
+    )
     perm_cols = [f.name for f in dataset.lake_schema.fields if f.name != "day"]
 
-    @cacheutil.scoped
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df = batch_df.transform(cacheutil.local_checkpoint)
-        # reference straggler filter: keep rows whose UTC day == the
-        # day encoded in the source filename (import_events.py:118)
-        day_rows = batch_df.filter(F.col("day") == F.col("_file_day"))
-        if day_rows.isEmpty():
-            return
+    def sink(batch_df: DataFrame) -> None:
         for suffix, percent, _months in SAMPLE_RATES:
-            typed = day_rows.filter(sample_cohort(dataset.id_column, percent)).select(
+            typed = batch_df.filter(sample_cohort(dataset.id_column, percent)).select(
                 *perm_cols, "day"
             )
             lake.write_days(f"{dataset.name}{suffix}", typed)
 
-    return (
-        events.writeStream.option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-# backwards-compatible aliases for the activity-specific names
-read_activity_stream = read_dataset_stream
-run_activity_import_stream = run_dataset_import_stream
+    return drain(day_rows, checkpoint_dir, sink)

@@ -6,14 +6,13 @@ Closes the one index family (VERDICT r10 item 6) whose incremental
 path had no streaming twin — BM25, IVF, sketches, graph, SCD2 and
 boilerplate already have theirs.
 
-Exactly-once without a transactional sink: the upsert itself is
-IDEMPOTENT by construction — ``ivfpq_upsert_index`` encodes the batch
-against the STORED codebooks/centroids (deterministic given the
-manifest, which bootstrap froze) and ``merge_replace``s both index
-tables by id, so a replayed micro-batch rewrites identical rows into
-the same cell partitions. Combined with the checkpointed file source,
-any crash/restart converges to the same index as batch maintenance
-over everything ingested (pinned by tests/test_streaming_ann.py).
+The upsert is IDEMPOTENT by construction — ``ivfpq_upsert_index``
+encodes the batch against the STORED codebooks/centroids
+(deterministic given the manifest, which bootstrap froze) and
+``merge_replace``s both index tables by id, so a replayed micro-batch
+rewrites identical rows into the same cell partitions, and any
+crash/restart converges to the same index as batch maintenance over
+everything ingested (pinned by tests/test_streaming_ann.py).
 
 First batch bootstraps the index (create-if-not-exists, S4) with a
 full ``ivfpq_build_index`` — centroids and codebooks are trained on
@@ -44,10 +43,7 @@ from fxa_activity_metrics_spark.operators.similarity import (
     ivfpq_upsert_index,
 )
 from fxa_activity_metrics_spark.sources.lake import Lake
-from fxa_activity_metrics_spark.streaming.dedup_stream import (
-    _docs_with_file_day,
-    _require_file_days,
-)
+from fxa_activity_metrics_spark.streaming._drain import drain_docs
 
 EMB_SCHEMA = T.StructType(
     [
@@ -70,12 +66,8 @@ def run_ann_index_stream(
 ):
     """Stream embedding day-drops (`embeddings-YYYY-MM-DD.json`) into
     the persisted IVFPQ index. Returns the started query."""
-    vecs = _docs_with_file_day(spark, source_dir, schema)
 
-    def write_index(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _require_file_days(batch_df)
+    def write_index(batch_df: DataFrame) -> None:
         delta = batch_df.select("vec_id", "embedding")
         if lake.exists(f"{name}_centroids"):
             ivfpq_upsert_index(lake, delta, name=name)
@@ -84,10 +76,4 @@ def run_ann_index_stream(
                 lake, delta, name=name, n_cells=n_cells, m=m, n_codes=n_codes
             )
 
-    return (
-        vecs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_index)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_docs(spark, source_dir, checkpoint_dir, write_index, schema)

@@ -11,13 +11,10 @@ generate+explode, and the split tag is the md5 split expression —
 so a dirty drop with a duplicated doc_id yields exactly the batch
 result (duplicated chunks), never a self-join fan-out.
 
-Exactly-once: checkpointed file source + the idempotent per-day
-dynamic-overwrite sink (the same contract as the dedup and
-text-stats streams — replays rewrite only their own day
-partitions). Because every step is deterministic (md5 splits,
-integer-exact chunk rule, fixed-point scores), stream output ==
-batch output over the same documents after any prefix of files —
-pinned by tests/test_streaming_assembly.py.
+Because every step is deterministic (md5 splits, integer-exact
+chunk rule, fixed-point scores), stream output == batch output over
+the same documents after any prefix of files — pinned by
+tests/test_streaming_assembly.py.
 """
 
 from __future__ import annotations
@@ -30,11 +27,7 @@ from fxa_activity_metrics_spark.operators.assembly import (
     split_col,
 )
 from fxa_activity_metrics_spark.sources.lake import Lake
-from fxa_activity_metrics_spark.streaming.dedup_stream import (
-    DOCS_SCHEMA,
-    _docs_with_file_day,
-    _require_file_days,
-)
+from fxa_activity_metrics_spark.streaming._drain import DOCS_SCHEMA, drain_docs
 
 
 def training_chunks_batch(
@@ -73,12 +66,8 @@ def run_training_chunks_stream(
     """Stream document day-drops → quality-gated, split-tagged
     training chunks in a day-partitioned table. Returns the started
     query."""
-    docs = _docs_with_file_day(spark, source_dir, schema)
 
-    def write_chunks(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _require_file_days(batch_df)
+    def write_chunks(batch_df: DataFrame) -> None:
         out = training_chunks_batch(
             batch_df,
             chunk_size=chunk_size,
@@ -87,10 +76,4 @@ def run_training_chunks_stream(
         )
         lake.write_days(table, out, sort_cols=["doc_id", "chunk_id"])
 
-    return (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_chunks)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_docs(spark, source_dir, checkpoint_dir, write_chunks, schema)

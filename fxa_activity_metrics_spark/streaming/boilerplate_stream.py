@@ -28,12 +28,7 @@ from pyspark.sql import types as T
 
 from fxa_activity_metrics_spark.operators.dedup import text_segments, tokens
 from fxa_activity_metrics_spark.sources.lake import Lake
-from fxa_activity_metrics_spark import cacheutil
-from fxa_activity_metrics_spark.streaming.dedup_stream import (
-    DOCS_SCHEMA,
-    _docs_with_file_day,
-    _require_file_days,
-)
+from fxa_activity_metrics_spark.streaming._drain import DOCS_SCHEMA, drain_docs
 
 SEGMENTS_DAY_SCHEMA = T.StructType(
     [
@@ -72,24 +67,12 @@ def run_segment_counts_stream(
 ):
     """Maintain the day-partitioned segment doc-frequency table from
     a stream of `documents-YYYY-MM-DD.json` day-drops. Returns the
-    started query (availableNow trigger)."""
-    docs = _docs_with_file_day(spark, source_dir, schema)
+    started query."""
 
-    @cacheutil.scoped
-    def write_counts(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _require_file_days(batch_df)
-        batch_df = batch_df.transform(cacheutil.local_checkpoint)
+    def write_counts(batch_df: DataFrame) -> None:
         lake.write_days(table, day_segment_counts(batch_df, width), sort_cols=["seg_hash"])
 
-    return (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_counts)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_docs(spark, source_dir, checkpoint_dir, write_counts, schema)
 
 
 def blocklist_from_lake(

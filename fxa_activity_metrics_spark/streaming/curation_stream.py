@@ -37,12 +37,7 @@ from fxa_activity_metrics_spark.operators.textstats import (
     text_stats,
 )
 from fxa_activity_metrics_spark.sources.lake import Lake
-from fxa_activity_metrics_spark import cacheutil
-from fxa_activity_metrics_spark.streaming.dedup_stream import (
-    DOCS_SCHEMA,
-    _docs_with_file_day,
-    _require_file_days,
-)
+from fxa_activity_metrics_spark.streaming._drain import DOCS_SCHEMA, drain_docs
 
 CURATED_SCHEMA = T.StructType(
     [
@@ -66,16 +61,10 @@ def run_curation_stream(
     """Maintain the day-partitioned curated-survivor table from
     `documents-YYYY-MM-DD.json` day-drops: each batch computes the
     per-doc quality gate + content hash from the increment only and
-    writes through the replace-the-day sink, so replays and
-    re-imports converge. Returns the started query."""
-    docs = _docs_with_file_day(spark, source_dir, schema)
+    writes through the replace-the-day sink. Returns the started
+    query."""
 
-    @cacheutil.scoped
-    def write_curated(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _require_file_days(batch_df)
-        batch_df = batch_df.transform(cacheutil.local_checkpoint)
+    def write_curated(batch_df: DataFrame) -> None:
         survivors = (
             text_stats(
                 batch_df,
@@ -90,13 +79,7 @@ def run_curation_stream(
         )
         lake.write_days(table, survivors, sort_cols=["doc_id"])
 
-    return (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_curated)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_docs(spark, source_dir, checkpoint_dir, write_curated, schema)
 
 
 def manifest_from_lake(

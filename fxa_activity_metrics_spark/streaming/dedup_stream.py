@@ -16,9 +16,8 @@ Scale notes:
   bounds it by retention (drop hashes not seen for N days via a
   TTL'd state key, or periodically rebuild from the lake); the
   reference's pipeline has the same property in its Redshift tables;
-- the merge sink replaces changed hashes only (idempotent per epoch,
-  exactly-once effect on the lake), identical to the flow-session
-  merge contract.
+- the merge sink replaces changed hashes only, like the flow-session
+  merge.
 """
 
 from __future__ import annotations
@@ -28,66 +27,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fxa_activity_metrics_spark.sources.lake import Lake
-from fxa_activity_metrics_spark import cacheutil
-
-DOCS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-    ]
+from fxa_activity_metrics_spark.streaming._drain import (
+    DOCS_SCHEMA,
+    drain,
+    drain_docs,
+    read_docs_stream,
 )
-
-
-def read_docs_stream(
-    spark: SparkSession, source_dir: str, schema: T.StructType = DOCS_SCHEMA
-) -> DataFrame:
-    """File-source stream of document day-drops (declared schema,
-    one file per trigger — the day-batch cadence)."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(source_dir)
-    )
-
-
-_FILE_DAY_RE = r"([0-9]{4}-[0-9]{2}-[0-9]{2})\.json$"
-
-
-def _docs_with_file_day(
-    spark: SparkSession, source_dir: str, schema: T.StructType
-) -> DataFrame:
-    """Document stream + the day parsed from each source file name,
-    carrying the file name for diagnostics."""
-    return (
-        read_docs_stream(spark, source_dir, schema)
-        .withColumn("_src_file", F.input_file_name())
-        .withColumn(
-            "day",
-            # try_cast: an unparseable name yields NULL here (ANSI cast
-            # would throw an opaque CAST_INVALID_INPUT mid-plan) and
-            # _require_file_days raises the actionable error instead
-            F.regexp_extract(F.col("_src_file"), _FILE_DAY_RE, 1).try_cast("date"),
-        )
-    )
-
-
-def _require_file_days(batch_df: DataFrame) -> None:
-    """Fail fast on files not named `*-YYYY-MM-DD.json`: a null day
-    would land those rows in the default partition, silently outside
-    every read_days / incremental_candidates window."""
-    bad = [
-        r["_src_file"]
-        for r in batch_df.filter(F.col("day").isNull())
-        .select("_src_file")
-        .distinct()
-        .limit(5)
-        .collect()
-    ]
-    if bad:
-        raise ValueError(
-            "document day-files must be named '<prefix>-YYYY-MM-DD.json'; "
-            f"cannot parse a day from: {bad}"
-        )
 
 
 def dedup_aggregate(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -105,14 +50,10 @@ def dedup_aggregate(docs: DataFrame, id_col: str = "doc_id", text_col: str = "te
 
 
 def merge_keepers_sink(lake: Lake, table: str = "dedup_keepers"):
-    """foreachBatch upsert by content_hash — replace changed hashes,
+    """Batch body: upsert by content_hash — replace changed hashes,
     keep the rest (idempotent per epoch)."""
 
-    @cacheutil.scoped
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        # sever micro-batch lineage before joining against the sink
-        # table (see flows_stream.merge_sessions_sink)
-        batch_df = batch_df.transform(cacheutil.local_checkpoint)
+    def write(batch_df: DataFrame) -> None:
         if lake.exists(table):
             existing = lake.read(table)
             kept = existing.join(
@@ -124,6 +65,16 @@ def merge_keepers_sink(lake: Lake, table: str = "dedup_keepers"):
         lake.overwrite(table, merged)
 
     return write
+
+
+def sign_batch(batch_df: DataFrame, num_hashes: int, shingle_n: int) -> DataFrame:
+    """The batch's MinHash signature rows keyed (id, ..., day) — the
+    rows plans.dedup_incremental.append_signatures writes."""
+    from fxa_activity_metrics_spark.operators.dedup import minhash_signature
+
+    return minhash_signature(
+        batch_df, "doc_id", "text", num_hashes, shingle_n
+    ).join(batch_df.select(F.col("doc_id").alias("id"), "day"), "id")
 
 
 def run_signature_import_stream(
@@ -138,36 +89,17 @@ def run_signature_import_stream(
 ):
     """Streaming twin of plans.dedup_incremental.append_signatures:
     each arriving document day-file is signed (MinHash over its
-    increment only) and written to the same day-partitioned signature
-    table the batch plan maintains — the file's day recovered from
-    its name, the sink idempotent per day. After any prefix of files,
-    `incremental_candidates` works on the table unchanged; batch and
-    stream writers are interchangeable (pinned by
-    tests/test_streaming_dedup.py). Returns the started query."""
-    from fxa_activity_metrics_spark.operators.dedup import minhash_signature
+    increment only, through the shared batch operator) and written to
+    the same day-partitioned signature table the batch plan maintains.
+    After any prefix of files, `incremental_candidates` works on the
+    table unchanged; batch and stream writers are interchangeable
+    (pinned by tests/test_streaming_dedup.py). Returns the started
+    query."""
 
-    docs = _docs_with_file_day(spark, source_dir, schema)
+    def write_signed(batch_df: DataFrame) -> None:
+        lake.write_days(table, sign_batch(batch_df, num_hashes, shingle_n), sort_cols=["id"])
 
-    # signing happens INSIDE the batch writer via the shared batch
-    # operator, so stream and batch produce byte-identical signature
-    # rows and the sink is the batch day sink (idempotent per day)
-    @cacheutil.scoped
-    def write_signed(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _require_file_days(batch_df)
-        out = minhash_signature(
-            batch_df, "doc_id", "text", num_hashes, shingle_n
-        ).join(batch_df.select(F.col("doc_id").alias("id"), "day"), "id")
-        lake.write_days(table, out, sort_cols=["id"])
-
-    return (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_signed)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_docs(spark, source_dir, checkpoint_dir, write_signed, schema)
 
 
 def run_incremental_dedup_stream(
@@ -190,28 +122,16 @@ def run_incremental_dedup_stream(
     candidates table equals the one-shot LSH candidate set over
     everything ingested (pinned by tests/test_streaming_dedup.py).
 
-    Both sinks are idempotent per day (dynamic partition overwrite),
-    so a replayed epoch converges to identical lake state. Each
-    micro-batch is a fresh plan over the lake — no cross-snapshot
+    Each micro-batch is a fresh plan over the lake — no cross-snapshot
     union, so the ReuseExchange stale-listing trap in the batch
     backfill cannot arise here. Returns the started query.
     """
-    from fxa_activity_metrics_spark.operators.dedup import minhash_signature
     from fxa_activity_metrics_spark.plans.dedup_incremental import (
         incremental_candidates,
     )
 
-    docs = _docs_with_file_day(spark, source_dir, schema)
-
-    @cacheutil.scoped
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _require_file_days(batch_df)
-        sigs = minhash_signature(
-            batch_df, "doc_id", "text", num_hashes, shingle_n
-        ).join(batch_df.select(F.col("doc_id").alias("id"), "day"), "id")
-        lake.write_days(sig_table, sigs, sort_cols=["id"])
+    def write(batch_df: DataFrame) -> None:
+        lake.write_days(sig_table, sign_batch(batch_df, num_hashes, shingle_n), sort_cols=["id"])
         days = [r["day"] for r in batch_df.select("day").distinct().collect()]
         for day in sorted(days):
             cands = incremental_candidates(
@@ -223,13 +143,7 @@ def run_incremental_dedup_stream(
                 sort_cols=["id_a", "id_b"],
             )
 
-    return (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_docs(spark, source_dir, checkpoint_dir, write, schema)
 
 
 def run_exact_dedup_stream(
@@ -238,17 +152,9 @@ def run_exact_dedup_stream(
     lake: Lake,
     checkpoint_dir: str,
     table: str = "dedup_keepers",
-    available_now: bool = True,
 ):
     """Wire source → running dedup agg → merge sink; returns the
     query. In update output mode each micro-batch emits only the
     hashes it touched."""
     agg = dedup_aggregate(read_docs_stream(spark, source_dir))
-    writer = (
-        agg.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(merge_keepers_sink(lake, table))
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(agg, checkpoint_dir, merge_keepers_sink(lake, table), mode="update")

@@ -5,8 +5,8 @@ by S3 listing (import_events.py:179-186) and a 1-day late-data grace
 (enrichments read day AND day+1, import_flow_events.py:170-171). The
 Structured Streaming mapping (SURVEY §2.9):
 
-- file source over the drop directory, `trigger(availableNow=True)`
-  for the scheduled-batch cadence or processingTime for continuous;
+- file source over the drop directory, drained on the `availableNow`
+  trigger — the scheduled-batch cadence;
 - `withWatermark("timestamp", "1 day")` — the same 1-day lateness
   contract, now enforced by the engine;
 - session state per flow_id as a streaming aggregation in update
@@ -15,8 +15,9 @@ Structured Streaming mapping (SURVEY §2.9):
   aggregate over the event stream — min(begin ts), max(flow_time),
   marker-event flags via max(bool), lexicographic max for
   locale/uid;
-- exactly-once sink: foreachBatch MERGE-by-flow_id into the lake
-  (idempotent per epoch — the reference's clear-day+insert contract).
+- sink: a MERGE-by-flow_id into the lake per micro-batch (the
+  reference's clear-day+insert contract), run by the shared drain
+  driver (streaming/_drain.py).
 
 State is bounded: the watermark evicts per-flow aggregation state one
 day after the flow's last event, matching the reference's grace
@@ -33,6 +34,7 @@ from pyspark.sql import functions as F
 
 from fxa_activity_metrics_spark.functions.core import (
     day_of,
+    empty_strings,
     parse_continued_from,
     ts_from_epoch,
 )
@@ -41,15 +43,13 @@ from fxa_activity_metrics_spark.schemas import (
     FLOW_METADATA_SCHEMA,
 )
 from fxa_activity_metrics_spark.sources.lake import Lake
-from fxa_activity_metrics_spark import cacheutil
+from fxa_activity_metrics_spark.streaming._drain import drain
 
 
 def read_flow_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     """File-source stream of flow CSV drops (headerless, declared
     schema — never inferred). Applies the SAME empty-string boundary
-    as the batch loader (sources/csv.py read_day_csv): missing CSV
-    fields are '' — never NULL — the reference's missing-value
-    sentinel (P4, SURVEY §7 trap 2). Without the coalesce the stream
+    as the batch loader (``empty_strings``): without it the stream
     and batch session tables diverge on every blank utm/migration
     field (caught by test_stream_full_chain_matches_batch_pipeline)."""
     raw = (
@@ -58,16 +58,10 @@ def read_flow_stream(spark: SparkSession, source_dir: str) -> DataFrame:
         .option("emptyValue", "")
         .csv(source_dir)
     )
-    raw = raw.select(
-        *[
-            F.coalesce(F.col(f.name), F.lit("")).alias(f.name)
-            if f.dataType.typeName() == "string"
-            else F.col(f.name)
-            for f in FLOW_CSV_SCHEMA.fields
-        ]
-    )
-    return raw.withColumn("timestamp", ts_from_epoch("timestamp")).withColumn(
-        "day", day_of("timestamp")
+    return (
+        empty_strings(raw)
+        .withColumn("timestamp", ts_from_epoch("timestamp"))
+        .withColumn("day", day_of("timestamp"))
     )
 
 
@@ -125,9 +119,8 @@ def session_aggregate(events: DataFrame, watermark: str = "1 day") -> DataFrame:
 
 
 def merge_sessions_sink(lake: Lake, table: str = "flow_metadata_stream"):
-    """foreachBatch upsert: replace changed flow_ids, keep the rest.
-    Idempotent per micro-batch — replaying an epoch converges to the
-    same table state (exactly-once effect on the lake).
+    """Batch body: upsert by flow_id — replace changed flow_ids, keep
+    the rest (idempotent per micro-batch).
 
     The sink table is export_date-PARTITIONED and the merge is
     partition-granular (Lake.merge_replace): only the partitions
@@ -137,15 +130,10 @@ def merge_sessions_sink(lake: Lake, table: str = "flow_metadata_stream"):
     therefore costs O(touched partitions) per micro-batch, never a
     full-table rewrite."""
 
-    @cacheutil.scoped
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        # localCheckpoint severs the micro-batch lineage: joining a
-        # streaming-derived frame against a batch read of the sink
-        # table otherwise trips attribute resolution (and would
-        # recompute the micro-batch per downstream action)
-        batch_df = batch_df.transform(cacheutil.local_checkpoint)
-        if batch_df.isEmpty():
-            return
+    # the drain driver's local checkpoint is what lets this join a
+    # streaming-derived frame against a batch read of the sink table
+    # (otherwise attribute resolution trips)
+    def write(batch_df: DataFrame) -> None:
         lake.merge_replace(
             table,
             batch_df,
@@ -164,19 +152,10 @@ def run_flow_sessions_stream(
     lake: Lake,
     checkpoint_dir: str,
     table: str = "flow_metadata_stream",
-    available_now: bool = True,
 ):
     """Wire source → session agg → merge sink; returns the query."""
-    events = read_flow_stream(spark, source_dir)
-    sessions = session_aggregate(events)
-    writer = (
-        sessions.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(merge_sessions_sink(lake, table))
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    sessions = session_aggregate(read_flow_stream(spark, source_dir))
+    return drain(sessions, checkpoint_dir, merge_sessions_sink(lake, table), mode="update")
 
 
 SESSION_STATS_SCHEMA = (
@@ -273,11 +252,7 @@ def run_session_stats_stream(
     events = read_flow_stream(spark, source_dir)
     stats = stateful_session_stats(events, timeout_ms=timeout_ms, watermark=watermark)
 
-    @cacheutil.scoped
-    def append(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df = batch_df.transform(cacheutil.local_checkpoint)
-        if batch_df.isEmpty():
-            return
+    def append(batch_df: DataFrame) -> None:
         lake.merge_replace(
             table,
             batch_df.withColumn("day", F.col("first_ts").cast("date")),
@@ -285,13 +260,7 @@ def run_session_stats_stream(
             "flow_id",
         )
 
-    return (
-        stats.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(append)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(stats, checkpoint_dir, append)
 
 
 def daily_event_counts_stream(events: DataFrame, watermark: str = "1 day") -> DataFrame:
@@ -312,21 +281,15 @@ def run_daily_counts_stream(
     checkpoint_dir: str,
     table: str = "daily_event_counts",
 ):
-    """Day-partitioned exactly-once sink (SURVEY §2.9 'Exactly-once /
-    idempotent sink'): foreachBatch merges each micro-batch's updated
-    (day, type) rows into the touched day partitions and rewrites ONLY
-    those partitions via dynamic partition overwrite — the streaming
-    version of the reference's clear-day+insert contract
-    (import_events.py:102-105). Replaying an epoch converges to the
-    same partition contents."""
+    """Day-partitioned idempotent sink (SURVEY §2.9): each
+    micro-batch's updated (day, type) rows are merged into the touched
+    day partitions and ONLY those partitions are rewritten (dynamic
+    partition overwrite) — the streaming version of the reference's
+    clear-day+insert contract (import_events.py:102-105)."""
     events = read_flow_stream(spark, source_dir)
     counts = daily_event_counts_stream(events)
 
-    @cacheutil.scoped
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df = batch_df.transform(cacheutil.local_checkpoint)
-        if batch_df.isEmpty():
-            return
+    def upsert(batch_df: DataFrame) -> None:
         days = [r["day"] for r in batch_df.select("day").distinct().collect()]
         if lake.exists(table):
             existing = lake.read_days(table, min(days), max(days))
@@ -338,10 +301,4 @@ def run_daily_counts_stream(
             merged = batch_df
         lake.write_days(table, merged, sort_cols=["type"])
 
-    return (
-        counts.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(counts, checkpoint_dir, upsert, mode="update")

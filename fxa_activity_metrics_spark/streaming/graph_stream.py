@@ -52,19 +52,13 @@ from pyspark.sql import types as T
 
 from fxa_activity_metrics_spark import cacheutil
 from fxa_activity_metrics_spark.operators import graph
-from fxa_activity_metrics_spark.operators.dedup import (
-    duplicate_clusters,
-    minhash_signature,
-)
+from fxa_activity_metrics_spark.operators.dedup import duplicate_clusters
 from fxa_activity_metrics_spark.plans.dedup_incremental import (
     incremental_candidates,
 )
 from fxa_activity_metrics_spark.sources.lake import Lake
-from fxa_activity_metrics_spark.streaming.dedup_stream import (
-    DOCS_SCHEMA,
-    _docs_with_file_day,
-    _require_file_days,
-)
+from fxa_activity_metrics_spark.streaming._drain import DOCS_SCHEMA, drain_docs
+from fxa_activity_metrics_spark.streaming.dedup_stream import sign_batch
 
 SIG_TABLE = "graph_signatures"
 EDGE_TABLE = "neardup_edges"
@@ -237,62 +231,33 @@ def run_neardup_graph_stream(
     through the idempotent day sink; components and PageRank advance
     once per batch over the batch's delta edges.  Returns the started
     query."""
-    docs = _docs_with_file_day(spark, source_dir, schema)
 
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        # foreachBatch runs on a stream-execution thread: a scope
-        # releases exactly this batch's frames on exit, never a
-        # concurrent query's (release_all here would kill those
-        # mid-flight — ADVICE r9 item 1).
-        with cacheutil.scope():
-            if batch_df.isEmpty():
-                return
-            _require_file_days(batch_df)
-            batch_df = batch_df.transform(cacheutil.local_checkpoint)
-            sigs = minhash_signature(
-                batch_df, "doc_id", "text", num_hashes, shingle_n
-            ).join(batch_df.select(F.col("doc_id").alias("id"), "day"), "id")
-            lake.write_days(sig_table, sigs, sort_cols=["id"])
-
-            days = sorted(
-                r["day"] for r in batch_df.select("day").distinct().collect()
+    def write(batch_df: DataFrame) -> None:
+        lake.write_days(sig_table, sign_batch(batch_df, num_hashes, shingle_n), sort_cols=["id"])
+        days = sorted(r["day"] for r in batch_df.select("day").distinct().collect())
+        batch_pairs = None
+        for day in days:
+            cands = incremental_candidates(
+                lake,
+                day,
+                num_hashes=num_hashes,
+                band_size=band_size,
+                table=sig_table,
+            ).transform(cacheutil.local_checkpoint)
+            lake.write_days(
+                edge_table,
+                cands.withColumn("day", F.lit(day)),
+                sort_cols=["id_a", "id_b"],
             )
-            batch_pairs = None
-            for day in days:
-                cands = incremental_candidates(
-                    lake,
-                    day,
-                    num_hashes=num_hashes,
-                    band_size=band_size,
-                    table=sig_table,
-                ).transform(cacheutil.local_checkpoint)
-                lake.write_days(
-                    edge_table,
-                    cands.withColumn("day", F.lit(day)),
-                    sort_cols=["id_a", "id_b"],
-                )
-                batch_pairs = (
-                    cands if batch_pairs is None
-                    else batch_pairs.unionByName(cands)
-                )
-            if batch_pairs is not None:
-                _maintain_graph_tables(
-                    lake,
-                    batch_pairs,
-                    days[-1],
-                    n_iters,
-                    comp_table,
-                    pr_table,
-                    edge_table,
-                )
+            batch_pairs = (
+                cands if batch_pairs is None
+                else batch_pairs.unionByName(cands)
+            )
+        _maintain_graph_tables(
+            lake, batch_pairs, days[-1], n_iters, comp_table, pr_table, edge_table
+        )
 
-    return (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_docs(spark, source_dir, checkpoint_dir, write, schema)
 
 
 def pagerank_from_lake(lake: Lake, pr_table: str = PR_TABLE) -> DataFrame:

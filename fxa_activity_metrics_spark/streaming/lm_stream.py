@@ -37,11 +37,7 @@ from fxa_activity_metrics_spark.operators.lmfilter import (
 )
 from fxa_activity_metrics_spark.sources.lake import Lake
 from fxa_activity_metrics_spark import cacheutil
-from fxa_activity_metrics_spark.streaming.dedup_stream import (
-    DOCS_SCHEMA,
-    _docs_with_file_day,
-    _require_file_days,
-)
+from fxa_activity_metrics_spark.streaming._drain import DOCS_SCHEMA, drain_docs
 
 UNIGRAMS_DAY_SCHEMA = T.StructType(
     [
@@ -92,28 +88,14 @@ def run_lm_counts_stream(
     """Maintain the day-partitioned LM count tables from a stream of
     `documents-YYYY-MM-DD.json` day-drops. Each batch's counts are
     computed from the increment only and written through the
-    idempotent day sink; replaying an epoch (or re-dropping a day's
-    file) converges to the same tables. Returns the started query."""
-    docs = _docs_with_file_day(spark, source_dir, schema)
+    idempotent day sink. Returns the started query."""
 
-    @cacheutil.scoped
-    def write_counts(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _require_file_days(batch_df)
-        # sever lineage once: both count jobs re-read the micro-batch
-        batch_df = batch_df.transform(cacheutil.local_checkpoint)
+    def write_counts(batch_df: DataFrame) -> None:
         uni, bg = day_counts(batch_df)
         lake.write_days(uni_table, uni, sort_cols=["w1"])
         lake.write_days(bg_table, bg, sort_cols=["w1", "w2"])
 
-    return (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_counts)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_docs(spark, source_dir, checkpoint_dir, write_counts, schema)
 
 
 BASE_DAY = dt.date(1970, 1, 1)

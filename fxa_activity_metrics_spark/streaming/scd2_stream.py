@@ -13,8 +13,8 @@ bit-identical to ``scd2_history`` over all events seen so far
 Replay safety: re-delivering a processed day is a no-op by
 construction — its events are already change points (or folded into
 a run), and collapsing (change points ∪ same events) reproduces the
-same intervals, so the foreachBatch overwrite is idempotent under
-checkpoint recovery. The cross-batch contract is the lake's usual
+same intervals, so the per-batch overwrite is idempotent. The
+cross-batch contract is the lake's usual
 one: drops arrive in day order (a drop EARLIER than stored history
 would interleave below existing change points, which the stored-
 point tiebreak cannot order).
@@ -28,12 +28,12 @@ never a full-history rewrite of untouched keys' interval math.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fxa_activity_metrics_spark import cacheutil
 from fxa_activity_metrics_spark.operators.summaries import scd2_apply_increment
 from fxa_activity_metrics_spark.sources.lake import Lake
+from fxa_activity_metrics_spark.streaming._drain import drain, read_docs_stream
 
 SCD2_TABLE = "scd2_history"
 
@@ -67,32 +67,14 @@ def run_scd2_stream(
     schema: T.StructType = EVENTS_SCHEMA,
 ):
     """Maintain the SCD2 dimension table from a stream of
-    ``events-YYYY-MM-DD.json`` day-drops. Returns the started query
-    (availableNow trigger — drain-and-stop, the repo's batch-parity
-    harness shape)."""
-    events = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(source_dir)
-    )
+    ``events-YYYY-MM-DD.json`` day-drops. Returns the started query."""
 
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        # Scoped release: this runs on a stream-execution thread, so
-        # only THIS batch's frames may be released (ADVICE r9 item 1).
-        with cacheutil.scope():
-            if batch_df.isEmpty():
-                return
-            batch_df = batch_df.transform(cacheutil.local_checkpoint)
-            stored = lake.read(table, SCD2_SCHEMA)
-            out = scd2_apply_increment(stored, batch_df).transform(
-                cacheutil.local_checkpoint
-            )
-            lake.overwrite(table, out)
+    def write(batch_df: DataFrame) -> None:
+        stored = lake.read(table, SCD2_SCHEMA)
+        # materialized before the overwrite replaces what it reads
+        out = scd2_apply_increment(stored, batch_df).transform(
+            cacheutil.local_checkpoint
+        )
+        lake.overwrite(table, out)
 
-    return (
-        events.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain(read_docs_stream(spark, source_dir, schema), checkpoint_dir, write)

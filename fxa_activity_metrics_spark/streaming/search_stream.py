@@ -3,14 +3,12 @@ cross — each arriving document day-drop is merged into the persisted
 BM25 index (`operators/search.py`), so the index follows the corpus
 incrementally and queries never wait for an offline rebuild.
 
-Exactly-once without a transactional sink: the upsert itself is
-IDEMPOTENT by construction — postings replace by doc_id
-(re-upserting a doc writes identical rows), and the manifest totals
-are reconciled against the replaced docs' CURRENT postings, so a
-replayed micro-batch subtracts exactly what it re-adds. Combined
-with the checkpointed file source, any crash/restart converges to
-the same index as a one-shot build over everything ingested (pinned
-by tests/test_streaming_search.py).
+The upsert is IDEMPOTENT by construction — postings replace by
+doc_id (re-upserting a doc writes identical rows), and the manifest
+totals are reconciled against the replaced docs' CURRENT postings,
+so a replayed micro-batch subtracts exactly what it re-adds, and any
+crash/restart converges to the same index as a one-shot build over
+everything ingested (pinned by tests/test_streaming_search.py).
 
 First batch bootstraps the index (create-if-not-exists, S4) with a
 full build; later batches pay only their own delta — history is
@@ -27,11 +25,7 @@ from fxa_activity_metrics_spark.operators.search import (
     upsert_text_index,
 )
 from fxa_activity_metrics_spark.sources.lake import Lake
-from fxa_activity_metrics_spark.streaming.dedup_stream import (
-    DOCS_SCHEMA,
-    _docs_with_file_day,
-    _require_file_days,
-)
+from fxa_activity_metrics_spark.streaming._drain import DOCS_SCHEMA, drain_docs
 
 
 def run_text_index_stream(
@@ -45,22 +39,12 @@ def run_text_index_stream(
 ):
     """Stream document day-drops into the persisted inverted index.
     Returns the started query."""
-    docs = _docs_with_file_day(spark, source_dir, schema)
 
-    def write_index(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _require_file_days(batch_df)
+    def write_index(batch_df: DataFrame) -> None:
         delta = batch_df.select("doc_id", "text")
         if lake.exists(f"{name}_stats"):
             upsert_text_index(lake, delta, name=name)
         else:
             build_text_index(lake, delta, name=name, n_buckets=n_buckets)
 
-    return (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_index)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_docs(spark, source_dir, checkpoint_dir, write_index, schema)

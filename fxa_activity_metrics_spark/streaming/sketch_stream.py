@@ -48,12 +48,7 @@ from fxa_activity_metrics_spark.operators.rollup import (
     _mg_fold,
 )
 from fxa_activity_metrics_spark.sources.lake import Lake
-from fxa_activity_metrics_spark import cacheutil
-from fxa_activity_metrics_spark.streaming.dedup_stream import (
-    DOCS_SCHEMA,
-    _docs_with_file_day,
-    _require_file_days,
-)
+from fxa_activity_metrics_spark.streaming._drain import DOCS_SCHEMA, drain_docs
 
 CMS_DAY_SCHEMA = T.StructType(
     [
@@ -146,25 +141,13 @@ def run_token_sketch_stream(
     `documents-YYYY-MM-DD.json` day-drops. Each batch's sketches are
     computed from the increment only and written through the
     idempotent day sink. Returns the started query."""
-    docs = _docs_with_file_day(spark, source_dir, schema)
 
-    @cacheutil.scoped
-    def write_sketches(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _require_file_days(batch_df)
-        batch_df = batch_df.transform(cacheutil.local_checkpoint)
+    def write_sketches(batch_df: DataFrame) -> None:
         cms, mg = day_token_sketches(batch_df)
         lake.write_days(cms_table, cms, sort_cols=["j", "bucket"])
         lake.write_days(mg_table, mg, sort_cols=["item"])
 
-    return (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_sketches)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_docs(spark, source_dir, checkpoint_dir, write_sketches, schema)
 
 
 def cms_from_lake(lake: Lake, cms_table: str = "token_cms") -> DataFrame:
@@ -239,25 +222,13 @@ def run_vocab_kmv_stream(
 ):
     """Maintain the day-partitioned vocabulary-KMV table from
     `documents-YYYY-MM-DD.json` day-drops through the idempotent day
-    sink: re-dropped days replace their own sketch row, replays
-    converge."""
-    docs = _docs_with_file_day(spark, source_dir, schema)
+    sink: a re-dropped day replaces its own sketch row. Returns the
+    started query."""
 
-    @cacheutil.scoped
-    def write_kmv(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _require_file_days(batch_df)
-        batch_df = batch_df.transform(cacheutil.local_checkpoint)
+    def write_kmv(batch_df: DataFrame) -> None:
         lake.write_days(kmv_table, day_vocab_kmv(batch_df, k=k), sort_cols=[])
 
-    return (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_kmv)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_docs(spark, source_dir, checkpoint_dir, write_kmv, schema)
 
 
 def vocab_uniques_from_lake(

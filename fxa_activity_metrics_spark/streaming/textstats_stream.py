@@ -6,14 +6,12 @@ with the BATCH text operators — quality stats + PII category counts
 — and written to a day-partitioned stats table through the batch day
 sink. Stream and batch writers are interchangeable: after any prefix
 of files the table equals the batch computation over the same
-documents (pinned by tests/test_streaming_textstats.py), and the
-per-day dynamic-overwrite sink makes replays idempotent.
+documents (pinned by tests/test_streaming_textstats.py).
 
 At scale this is the curation front-door: per-document scores land
-incrementally as corpus shards arrive, with exactly-once semantics
-from the checkpointed file source + idempotent day sink, and the
-scoring itself is the same one-scan JVM projection the batch path
-uses (no state, no watermark needed — pure per-row enrichment).
+incrementally as corpus shards arrive, and the scoring itself is the
+same one-scan JVM projection the batch path uses (no state, no
+watermark needed — pure per-row enrichment).
 """
 
 from __future__ import annotations
@@ -26,11 +24,7 @@ from fxa_activity_metrics_spark.operators.textstats import (
     text_stats,
 )
 from fxa_activity_metrics_spark.sources.lake import Lake
-from fxa_activity_metrics_spark.streaming.dedup_stream import (
-    DOCS_SCHEMA,
-    _docs_with_file_day,
-    _require_file_days,
-)
+from fxa_activity_metrics_spark.streaming._drain import DOCS_SCHEMA, drain_docs
 
 
 def run_text_stats_stream(
@@ -43,12 +37,8 @@ def run_text_stats_stream(
 ):
     """Stream document day-drops → per-doc quality + PII stats into a
     day-partitioned table. Returns the started query."""
-    docs = _docs_with_file_day(spark, source_dir, schema)
 
-    def write_stats(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _require_file_days(batch_df)
+    def write_stats(batch_df: DataFrame) -> None:
         # ONE projection: quality stats, PII counts, and the day are
         # all per-row expressions — no joins, so a dirty drop with a
         # duplicated doc_id stays two rows (as in batch) instead of
@@ -58,10 +48,4 @@ def run_text_stats_stream(
         )
         lake.write_days(table, out, sort_cols=["doc_id"])
 
-    return (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_stats)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return drain_docs(spark, source_dir, checkpoint_dir, write_stats, schema)

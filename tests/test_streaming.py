@@ -31,6 +31,12 @@ def src_dir(tmp_path_factory):
     return d
 
 
+def _persisted_rdds(spark):
+    """Ids of the session's persisted RDDs: a drain adds none that
+    outlive it (earlier tests' batch oracles may have left their own)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def _static_events(spark, src_dir):
     # model the batch typed boundary: empty CSV fields are '' (P4)
     raw = spark.read.schema(FLOW_CSV_SCHEMA).option("emptyValue", "").csv(src_dir)
@@ -81,6 +87,7 @@ def test_stream_restart_is_idempotent(spark, src_dir, tmp_path):
     and leaves the sink unchanged (exactly-once effect)."""
     lake = Lake(spark, str(tmp_path / "lake2"))
     ckpt = str(tmp_path / "ckpt2")
+    persisted = _persisted_rdds(spark)
     q = run_flow_sessions_stream(spark, src_dir, lake, checkpoint_dir=ckpt)
     q.awaitTermination(120)
     before = sorted(tuple(str(v) for v in r) for r in lake.read("flow_metadata_stream").collect())
@@ -88,6 +95,7 @@ def test_stream_restart_is_idempotent(spark, src_dir, tmp_path):
     q2.awaitTermination(120)
     after = sorted(tuple(str(v) for v in r) for r in lake.read("flow_metadata_stream").collect())
     assert after == before
+    assert _persisted_rdds(spark) <= persisted
 
 
 def _partition_files(lake, table):
@@ -260,16 +268,17 @@ def test_activity_import_stream_matches_batch(spark, tmp_path):
     from fxa_activity_metrics_spark.plans.incremental import ImportJob
     from fxa_activity_metrics_spark.schemas import ACTIVITY, SAMPLE_RATES
     from fxa_activity_metrics_spark.streaming.activity_stream import (
-        run_activity_import_stream,
+        run_dataset_import_stream,
     )
     from tests.fixtures import write_activity_days
 
     src = str(tmp_path / "src")
     days = [D1, D2]
     write_activity_days(src, days)
+    persisted = _persisted_rdds(spark)
 
     stream_lake = Lake(spark, str(tmp_path / "stream_lake"))
-    q = run_activity_import_stream(
+    q = run_dataset_import_stream(
         spark, src, stream_lake, checkpoint_dir=str(tmp_path / "ckpt_act")
     )
     q.awaitTermination(120)
@@ -287,11 +296,13 @@ def test_activity_import_stream_matches_batch(spark, tmp_path):
         assert rows(stream_lake, t) == rows(batch_lake, t), t
 
     before = rows(stream_lake, "activity_events")
-    q2 = run_activity_import_stream(
+    q2 = run_dataset_import_stream(
         spark, src, stream_lake, checkpoint_dir=str(tmp_path / "ckpt_act")
     )
     q2.awaitTermination(120)
     assert rows(stream_lake, "activity_events") == before
+    # every batch's checkpoint blocks are released when it returns
+    assert _persisted_rdds(spark) <= persisted
 
 
 def test_dataset_import_stream_email_mixed_dir(spark, tmp_path):
@@ -412,3 +423,19 @@ def test_stream_full_chain_matches_batch_pipeline(spark, tmp_path):
     assert c[cols.index("completed")] == "True"
     assert c[cols.index("export_date")] == str(D2)
     assert by_flow[f_e][cols.index("continued_from")] == F_C
+
+
+def test_foreach_batch_has_one_start_chain():
+    """Every foreachBatch twin starts through the one drain driver:
+    no module but streaming/_drain.py calls `.foreachBatch(`."""
+    import pathlib
+
+    import fxa_activity_metrics_spark
+
+    root = pathlib.Path(fxa_activity_metrics_spark.__file__).parent
+    callers = sorted(
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if ".foreachBatch(" in p.read_text()
+    )
+    assert callers == ["streaming/_drain.py"]

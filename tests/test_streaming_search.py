@@ -62,8 +62,12 @@ def src_dir(tmp_path):
 
 def test_stream_index_matches_oneshot_build(spark, src_dir, tmp_path):
     lake = Lake(spark, str(tmp_path / "lake"))
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     q = run_text_index_stream(spark, src_dir, lake, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
+    # every batch's checkpoint blocks are released when it returns
+    # (earlier tests' batch oracles may have left their own)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) <= persisted
     assert _query_rows(lake) == _oneshot_rows(
         spark, tmp_path, _DAY1 + _DAY2, "a"
     )
