@@ -7,8 +7,10 @@ in BENCH_LOCAL.json):
   {"metric": "...", "value": N, "unit": "sec", "queries": {...},
    "n_queries": N, "full_record": "BENCH_LOCAL.json", "sf": ...}
 
-Each query is fully executed via the noop sink (no driver collect, no
-result materialization skew) after a shared-session warmup.
+Also home of the repo's one run loop, `timed_runs` (job group per run,
+timed build, noop-sink execution, cache release), and of the warmed
+session every timing tool starts from, `warm_session`; the tools under
+tools/ import both from here.
 """
 
 from __future__ import annotations
@@ -17,12 +19,15 @@ import json
 import os
 import sys
 import time
+import uuid
+from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from fxa_activity_metrics_spark.session import get_spark  # noqa: E402
 from fxa_activity_metrics_spark import cacheutil  # noqa: E402
+from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -130,11 +135,44 @@ def scaling_violations(
     return sorted(out)
 
 
-def main() -> None:
-    spark = get_spark("fxa-bench")
-    qs = entrymod.all_queries()
-    # warmup: JVM/codegen spin-up on a trivial job
+def warm_session(app_name: str) -> SparkSession:
+    """get_spark plus one trivial job, so JVM start-up and the first
+    codegen are not billed to the first timed run."""
+    spark = get_spark(app_name)
     spark.range(1000).selectExpr("sum(id)").collect()
+    return spark
+
+
+def timed_runs(
+    spark: SparkSession, label: str, build: Callable[[], DataFrame], runs: int
+) -> list[tuple[float, float, str]]:
+    """The run loop every timing tool shares. Each of ``runs`` runs
+    gets a job group of its own, builds the frame (timed), executes it
+    through the noop sink (no driver collect, no result
+    materialization skew) and releases the globally tracked caches, so
+    residue never accumulates across a 100+-query session (VERDICT r8
+    item 8). Returns one ``(build_s, wall_s, group)`` per run; wall_s
+    includes the build and excludes the release. The caller picks its
+    own statistic (min, first run) and reads the group's jobs from the
+    status stores if it wants them."""
+    sc = spark.sparkContext
+    out = []
+    for _ in range(runs):
+        group = f"{label}-{uuid.uuid4().hex[:12]}"
+        sc.setJobGroup(group, label)
+        t0 = time.perf_counter()
+        df = build()
+        build_s = time.perf_counter() - t0
+        df.write.format("noop").mode("overwrite").save()
+        out.append((build_s, time.perf_counter() - t0, group))
+        cacheutil.release_all()
+        sc.setJobGroup(None, None)
+    return out
+
+
+def main() -> None:
+    spark = warm_session("fxa-bench")
+    qs = entrymod.all_queries()
 
     sf_tag = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     try:
@@ -182,19 +220,9 @@ def main() -> None:
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
     for name in bench_queries:
-        fn = qs[name]
-        per_run = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            df = fn(spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            per_run.append(time.perf_counter() - t0)
-            # caller-owned cache lifecycle: drop this query's tracked
-            # intermediates so residue never accumulates across the
-            # 100+-query session (VERDICT r8 item 8)
-            cacheutil.release_all()
-        cold[name] = round(per_run[0], 3)
-        timings[name] = round(min(per_run), 3)
+        runs = timed_runs(spark, name, lambda: qs[name](spark, SF_DIR), 3)
+        cold[name] = round(runs[0][1], 3)
+        timings[name] = round(min(w for _, w, _ in runs), 3)
 
     # Shared-warm pass: cache the two corpus scans every text/vector
     # query re-reads (Spark's CacheManager substitutes the cached
@@ -208,14 +236,8 @@ def main() -> None:
         df.cache().count()
     warm: dict[str, float] = {}
     for name in bench_queries:
-        fn = qs[name]
-        per_run = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            per_run.append(time.perf_counter() - t0)
-            cacheutil.release_all()
-        warm[name] = round(min(per_run), 3)
+        runs = timed_runs(spark, name, lambda: qs[name](spark, SF_DIR), 2)
+        warm[name] = round(min(w for _, w, _ in runs), 3)
     for df in shared:
         df.unpersist()
 

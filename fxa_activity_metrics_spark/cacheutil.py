@@ -132,13 +132,7 @@ def release_frame(df: DataFrame, blocking: bool = False) -> None:
     scopes = [_GLOBAL] + list(getattr(_local, "stack", []) or [])
     if ck is not None:
         sc, ids = ck
-        try:
-            jmap = sc._jsc.getPersistentRDDs()
-            for i in ids:
-                if jmap.containsKey(i):
-                    jmap.get(i).unpersist(blocking)
-        except Exception:
-            pass
+        _unpersist_ckpt(sc, ids, blocking)
         for s in scopes:
             s.ckpts = [c for c in s.ckpts if c[1] != ids]
         return
@@ -148,6 +142,21 @@ def release_frame(df: DataFrame, blocking: bool = False) -> None:
         pass
     for s in scopes:
         s.frames = [f for f in s.frames if f is not df]
+
+
+def _unpersist_ckpt(sc, ids: frozenset, blocking: bool) -> int:
+    """Unpersist a local checkpoint's registered RDDs; returns how many
+    were still registered. A stopped session is skipped silently."""
+    n = 0
+    try:
+        jmap = sc._jsc.getPersistentRDDs()
+        for i in ids:
+            if jmap.containsKey(i):
+                jmap.get(i).unpersist(blocking)
+                n += 1
+    except Exception:
+        pass
+    return n
 
 
 def _release(s: _Scope, blocking: bool = False) -> int:
@@ -161,15 +170,7 @@ def _release(s: _Scope, blocking: bool = False) -> int:
             # session already stopped / frame already unpersisted
             pass
     while s.ckpts:
-        sc, ids = s.ckpts.pop()
-        try:
-            jmap = sc._jsc.getPersistentRDDs()
-            for i in ids:
-                if jmap.containsKey(i):
-                    jmap.get(i).unpersist(blocking)
-                    n += 1
-        except Exception:
-            pass
+        n += _unpersist_ckpt(*s.ckpts.pop(), blocking)
     return n
 
 

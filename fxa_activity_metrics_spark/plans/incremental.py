@@ -10,7 +10,7 @@ Reproduces the reference's generic import pipeline `run(...)`
 - per-day idempotent load into the three sampled lake variants
   (S5, :205-219);
 - retention expiry keyed off max_day (S6, :226-236);
-- lifecycle hooks before_import / after_day / after_import (C1).
+- the per-day lifecycle hook after_day (C1).
 
 Everything driver-side here is metadata-only (file listings, day
 arithmetic); row data never touches the driver.
@@ -64,13 +64,11 @@ class ImportJob:
     day_from: dt.date | None = None
     day_until: dt.date | None = None
     force_reload: bool = False  # C5 (import_counts.py:94)
-    # datasets whose after_day hook owns the perm write (flow events
-    # are written control-event-consumed by the hook) set this False
-    write_perm: bool = True
-    # lifecycle hooks (C1, import_events.py:147-157,220-223,258)
-    before_import: Callable[["ImportJob"], None] | None = None
+    # per-day lifecycle hook (C1, import_events.py:220-223). A dataset
+    # with a hook leaves the perm write to it (flow events are written
+    # control-event-consumed by the hook); without one the typed day
+    # is written as is.
     after_day: Callable[["ImportJob", dt.date, DataFrame, str, int], None] | None = None
-    after_import: Callable[["ImportJob", dt.date | None], None] | None = None
 
     def table(self, suffix: str) -> str:
         return self.dataset.name + suffix
@@ -100,9 +98,11 @@ class ImportJob:
     def max_day(self) -> dt.date | None:
         """C3: max(extant lake day, newest discovered source day)
         (import_events.py:245-253)."""
-        candidates = [d for d, _ in self.candidate_days()]
-        lake_max = self.lake.max_day(self.table(""))
-        vals = [d for d in (max(candidates, default=None), lake_max) if d]
+        return self._max_day(self.candidate_days())
+
+    def _max_day(self, work: list[tuple[dt.date, str]]) -> dt.date | None:
+        newest = max((d for d, _ in work), default=None)
+        vals = [d for d in (newest, self.lake.max_day(self.table(""))) if d]
         return max(vals, default=None)
 
     # -- execution ----------------------------------------------------------
@@ -118,19 +118,18 @@ class ImportJob:
                 max_lengths=self.dataset.max_lengths,
             )
             for suffix, percent, months in SAMPLE_RATES:
-                cutoff = _add_months(max_day, -months)
+                if self.after_day:
+                    self.after_day(self, day, raw, suffix, percent)
+                    continue
                 typed = typed_day_events(
                     raw,
                     day,
                     id_column=self.dataset.id_column,
                     percent=percent,
-                    retention_cutoff=cutoff,
+                    retention_cutoff=_add_months(max_day, -months),
                     columns=[f.name for f in self.dataset.lake_schema.fields if f.name != "day"],
                 )
-                if self.write_perm:
-                    self.lake.write_days(self.table(suffix), typed)
-                if self.after_day:
-                    self.after_day(self, day, raw, suffix, percent)
+                self.lake.write_days(self.table(suffix), typed)
 
     def expire(self, max_day: dt.date) -> None:
         """S6 + S7: retention expiry then compaction, per variant."""
@@ -158,10 +157,8 @@ class ImportJob:
     def run(self) -> list[dt.date]:
         """The full pipeline (import_events.py:238-258). Returns the
         days processed (newest first)."""
-        if self.before_import:
-            self.before_import(self)
         work = self.candidate_days()
-        max_day = self.max_day()
+        max_day = self._max_day(work)
         processed = []
         for day, path in work:  # newest first
             self.import_day(day, path, max_day)
@@ -169,8 +166,6 @@ class ImportJob:
         if max_day:
             self.expire(max_day)
             self.maintain(max_day)
-        if self.after_import:
-            self.after_import(self, max_day)
         return processed
 
 

@@ -62,7 +62,7 @@ def run_full_import(
     ).run()
     report.flow_days = ImportJob(
         spark=spark, lake=lake, dataset=FLOW, source_dir=source_dir,
-        force_reload=force_reload, write_perm=False, after_day=flow_after_day,
+        force_reload=force_reload, after_day=flow_after_day,
     ).run()
     report.email_days = ImportJob(
         spark=spark, lake=lake, dataset=EMAIL, source_dir=source_dir,

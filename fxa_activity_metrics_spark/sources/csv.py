@@ -47,8 +47,7 @@ def clean_raw_lines(
     lines = spark.read.text(path)
     if reject_injection:
         lines = lines.filter(~F.col("value").rlike(_INJECTION_RE))
-    field_re = r"^([^,]*,){%d}[^,]*$" % (n_fields - 1)
-    return lines.filter(F.col("value").rlike(field_re))
+    return validate_field_count(lines, n_fields)
 
 
 def validate_field_count(lines: DataFrame, n_fields: int) -> DataFrame:

@@ -253,3 +253,26 @@ def test_pipeline_record_carries_day_scaling_gate():
         assert set(run["stages"]) == set(bp.STAGES), (
             sorted(set(run["stages"]) ^ set(bp.STAGES)))
     assert rec["gate"] == [], rec["gate"]
+
+
+def test_noop_write_only_in_run_loop():
+    """bench.py and every tool time their queries through the one run
+    loop: `format("noop")` appears once in them, inside
+    bench.timed_runs."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(REPO)
+    files = [root / "bench.py", *sorted((root / "tools").glob("*.py"))]
+    hits = {
+        str(p.relative_to(root)): n
+        for p in files
+        if (n := p.read_text().count('format("noop")'))
+    }
+    assert hits == {"bench.py": 1}
+    src = (root / "bench.py").read_text()
+    loop = next(
+        n for n in ast.parse(src).body
+        if isinstance(n, ast.FunctionDef) and n.name == "timed_runs"
+    )
+    assert 'format("noop")' in ast.get_source_segment(src, loop)

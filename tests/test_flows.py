@@ -39,7 +39,6 @@ def lake(spark, tmp_path_factory):
         lake=lake,
         dataset=FLOW,
         source_dir=src,
-        write_perm=False,  # the after_day hook owns the perm write
         after_day=flow_after_day,
     )
     assert job.run() == [D2, D1], "newest-first so day+1 is present for the grace reads"
@@ -105,7 +104,7 @@ def test_idempotent_rerun(spark, lake):
     before = sorted(tuple(str(v) for v in r) for r in lake.read("flow_metadata").collect())
     job = ImportJob(
         spark=spark, lake=lake, dataset=FLOW, source_dir=lake._src,
-        write_perm=False, after_day=flow_after_day, force_reload=True,
+        after_day=flow_after_day, force_reload=True,
     )
     job.run()
     after = sorted(tuple(str(v) for v in r) for r in lake.read("flow_metadata").collect())
@@ -140,7 +139,7 @@ def test_precutoff_context_backfill(spark, tmp_path):
     lake = Lake(spark, str(tmp_path / "lake"))
     job = ImportJob(
         spark=spark, lake=lake, dataset=FLOW, source_dir=src,
-        write_perm=False, after_day=flow_after_day,
+        after_day=flow_after_day,
     )
     assert job.run() == [BF_DAY]
     rows = lake.read("flow_metadata").filter(F.col("flow_id") == F_E).collect()

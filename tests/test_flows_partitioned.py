@@ -56,7 +56,6 @@ def env(spark, tmp_path_factory):
         lake=lake,
         dataset=FLOW,
         source_dir=src,
-        write_perm=False,
         after_day=flow_after_day,
     )
     assert job.run() == [D2, D1]

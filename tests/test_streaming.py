@@ -393,7 +393,6 @@ def test_stream_full_chain_matches_batch_pipeline(spark, tmp_path):
         lake=blake,
         dataset=FLOW,
         source_dir=src,
-        write_perm=False,
         after_day=flow_after_day,
     )
     assert job.run() == [d3, D2, D1]

@@ -13,6 +13,7 @@ import time
 
 import pytest
 
+from fxa_activity_metrics_spark import cacheutil
 from fxa_activity_metrics_spark.operators.dedup import (
     frequent_segments,
     remove_boilerplate,
@@ -119,10 +120,15 @@ def test_cleaning_with_streamed_blocklist_equals_batch(spark, src_dir, tmp_path)
     q.awaitTermination(120)
 
     corpus = _docs_df(spark, _DAY1 + _DAY2)
-    via_stream = remove_boilerplate(
-        corpus, width=_WIDTH, blocklist=blocklist_from_lake(lake, min_docs=2)
-    )
-    via_batch = remove_boilerplate(corpus, width=_WIDTH, min_docs=2)
-    assert sorted(map(tuple, via_stream.collect())) == sorted(
-        map(tuple, via_batch.collect())
-    )
+    try:
+        via_stream = remove_boilerplate(
+            corpus, width=_WIDTH, blocklist=blocklist_from_lake(lake, min_docs=2)
+        )
+        via_batch = remove_boilerplate(corpus, width=_WIDTH, min_docs=2)
+        assert sorted(map(tuple, via_stream.collect())) == sorted(
+            map(tuple, via_batch.collect())
+        )
+    finally:
+        # the batch remove_boilerplate tracks its persisted blocklist
+        # in the global registry
+        cacheutil.release_all()

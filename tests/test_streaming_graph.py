@@ -15,6 +15,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from fxa_activity_metrics_spark import cacheutil
 from fxa_activity_metrics_spark.operators import graph
 from fxa_activity_metrics_spark.operators.dedup import (
     duplicate_clusters,
@@ -90,52 +91,57 @@ def _comp_rows(df):
 
 
 def test_stream_graph_equals_batch(spark, src_dir, tmp_path):
-    lake = Lake(spark, str(tmp_path / "lake"))
-    _run(spark, src_dir, lake, str(tmp_path / "ckpt"))
+    try:
+        lake = Lake(spark, str(tmp_path / "lake"))
+        _run(spark, src_dir, lake, str(tmp_path / "ckpt"))
 
-    two = ("2024-07-01", "2024-07-02")
-    want_pairs = {
-        (r.id_a, r.id_b) for r in _batch_pairs(spark, two).collect()
-    }
-    got_pairs = {
-        (r.id_a, r.id_b)
-        for r in lake.read("neardup_edges").select("id_a", "id_b").collect()
-    }
-    assert got_pairs == want_pairs and want_pairs, "edge union == one-shot LSH"
+        two = ("2024-07-01", "2024-07-02")
+        want_pairs = {
+            (r.id_a, r.id_b) for r in _batch_pairs(spark, two).collect()
+        }
+        got_pairs = {
+            (r.id_a, r.id_b)
+            for r in lake.read("neardup_edges").select("id_a", "id_b").collect()
+        }
+        assert got_pairs == want_pairs and want_pairs, "edge union == one-shot LSH"
 
-    assert _comp_rows(components_from_lake(lake)) == _comp_rows(
-        duplicate_clusters(_batch_pairs(spark, two))
-    )
-    want_pr = graph.pagerank(
-        graph.symmetrize(_batch_pairs(spark, two)), n_iters=3
-    ).select(F.col("id").alias("doc_id"), "pr_micro")
-    assert _pr_rows(pagerank_from_lake(lake)) == _pr_rows(want_pr)
+        assert _comp_rows(components_from_lake(lake)) == _comp_rows(
+            duplicate_clusters(_batch_pairs(spark, two))
+        )
+        want_pr = graph.pagerank(
+            graph.symmetrize(_batch_pairs(spark, two)), n_iters=3
+        ).select(F.col("id").alias("doc_id"), "pr_micro")
+        assert _pr_rows(pagerank_from_lake(lake)) == _pr_rows(want_pr)
 
-    # day 3 arrives: a NEW component, disjoint from A
-    _write_drop(src_dir, "documents-2024-07-03.json", _DAY3, time.time())
-    _run(spark, src_dir, lake, str(tmp_path / "ckpt"))
+        # day 3 arrives: a NEW component, disjoint from A
+        _write_drop(src_dir, "documents-2024-07-03.json", _DAY3, time.time())
+        _run(spark, src_dir, lake, str(tmp_path / "ckpt"))
 
-    all_keys = tuple(_DAYS)
-    assert _comp_rows(components_from_lake(lake)) == _comp_rows(
-        duplicate_clusters(_batch_pairs(spark, all_keys))
-    )
-    want_pr3 = graph.pagerank(
-        graph.symmetrize(_batch_pairs(spark, all_keys)), n_iters=3
-    ).select(F.col("id").alias("doc_id"), "pr_micro")
-    assert _pr_rows(pagerank_from_lake(lake)) == _pr_rows(want_pr3)
+        all_keys = tuple(_DAYS)
+        assert _comp_rows(components_from_lake(lake)) == _comp_rows(
+            duplicate_clusters(_batch_pairs(spark, all_keys))
+        )
+        want_pr3 = graph.pagerank(
+            graph.symmetrize(_batch_pairs(spark, all_keys)), n_iters=3
+        ).select(F.col("id").alias("doc_id"), "pr_micro")
+        assert _pr_rows(pagerank_from_lake(lake)) == _pr_rows(want_pr3)
 
-    # incrementality: component A gained no edge on day 3, so its
-    # rows were NOT recomputed — updated_day still predates day 3
-    stamps = {
-        r.doc_id: str(r.updated_day)
-        for r in lake.read("neardup_pagerank").collect()
-    }
-    comp_a = {d for d, _ in _DAY1 + _DAY2 if d in stamps}
-    comp_b = {d for d, _ in _DAY3 if d in stamps}
-    assert comp_b and all(stamps[d] == "2024-07-03" for d in comp_b)
-    assert comp_a and all(stamps[d] < "2024-07-03" for d in comp_a), (
-        "untouched component was re-ranked"
-    )
+        # incrementality: component A gained no edge on day 3, so its
+        # rows were NOT recomputed — updated_day still predates day 3
+        stamps = {
+            r.doc_id: str(r.updated_day)
+            for r in lake.read("neardup_pagerank").collect()
+        }
+        comp_a = {d for d, _ in _DAY1 + _DAY2 if d in stamps}
+        comp_b = {d for d, _ in _DAY3 if d in stamps}
+        assert comp_b and all(stamps[d] == "2024-07-03" for d in comp_b)
+        assert comp_a and all(stamps[d] < "2024-07-03" for d in comp_a), (
+            "untouched component was re-ranked"
+        )
+    finally:
+        # the batch oracles (duplicate_clusters, pagerank) track
+        # persisted rounds in the global registry
+        cacheutil.release_all()
 
 
 def test_stream_graph_replay_converges(spark, src_dir, tmp_path):

@@ -25,14 +25,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from fxa_activity_metrics_spark.session import get_spark  # noqa: E402
-from fxa_activity_metrics_spark import cacheutil  # noqa: E402
-
-from bench import scaling_violations  # noqa: E402
+from bench import scaling_violations, timed_runs, warm_session  # noqa: E402
 
 # every pair-output-bound consumer of the near-dup pair structure:
 # the three adjudicated in VERDICT r12 item 2, plus the three already
@@ -112,9 +108,8 @@ def main() -> None:
     with open(os.path.join(root, "BENCH_LOCAL.json")) as f:
         base = json.load(f)["queries"]
 
-    spark = get_spark("bench-organic")
+    spark = warm_session("bench-organic")
     qs = em.queries()
-    spark.range(1000).selectExpr("sum(id)").collect()
     record: dict = {"clone_cap": CLONE_CAP, "runs": {}}
     from fxa_activity_metrics_spark.operators import multimodal
 
@@ -131,15 +126,8 @@ def main() -> None:
         for name, fn in [(n, qs[n]) for n in FAMILY] + [
             ("phash_pairs", q_phash_scaled)
         ]:
-            per = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                per.append(time.perf_counter() - t0)
-                cacheutil.release_all()
-            timings[name] = round(min(per), 3)
+            runs = timed_runs(spark, name, lambda: fn(spark, sf_dir), 2)
+            timings[name] = round(min(w for _, w, _ in runs), 3)
             print(f"{run_name} {name}: {timings[name]}", file=sys.stderr)
         record["runs"][run_name] = {
             "data_ratio_vs_base": ratio,
@@ -163,13 +151,8 @@ def main() -> None:
         fns = emb_family(em, similarity, read_table, spark, sf_dir)
         timings = {}
         for name, thunk in fns.items():
-            per = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                thunk().write.format("noop").mode("overwrite").save()
-                per.append(time.perf_counter() - t0)
-                cacheutil.release_all()
-            timings[name] = round(min(per), 3)
+            runs = timed_runs(spark, name, thunk, 2)
+            timings[name] = round(min(w for _, w, _ in runs), 3)
             print(f"{run_name} {name}: {timings[name]}", file=sys.stderr)
         if run_name == "sf0.1":
             emb_base = timings

@@ -19,9 +19,9 @@ once), so day-linear is the machine-checkable contract.
 Stages (public API only):
 - activity_import: ImportJob(ACTIVITY).run() over all source days
   (per-day CSV load → 3 sampled variants, retention expiry).
-- flow_import:     ImportJob(FLOW, write_perm=False,
-  after_day=flow_after_day).run() — the full hook chain (flow
-  metadata merge, experiments, grace-window backfill).
+- flow_import:     ImportJob(FLOW, after_day=flow_after_day).run() —
+  the full hook chain (perm write, flow metadata merge, experiments,
+  grace-window backfill).
 - summaries:       summarize_daily per sampled variant
   (daily_activity_per_device + the 7-day multi-device join).
 - maintain:        ImportJob.maintain — z-order every CLOSED day
@@ -47,7 +47,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from fxa_activity_metrics_spark.session import get_spark  # noqa: E402
+from bench import scaling_violations, warm_session  # noqa: E402
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ACT_ROWS_PER_DAY = 100_000
@@ -146,7 +146,7 @@ def run_pipeline(spark, src_dir: str, lake_dir: str) -> dict[str, float]:
     t0 = time.perf_counter()
     flow_job = ImportJob(
         spark=spark, lake=lake, dataset=flow_plain, source_dir=src_dir,
-        write_perm=False, after_day=flow_after_day,
+        after_day=flow_after_day,
     )
     flow_days = flow_job.run()
     stages["flow_import"] = round(time.perf_counter() - t0, 3)
@@ -162,8 +162,7 @@ def run_pipeline(spark, src_dir: str, lake_dir: str) -> dict[str, float]:
         spark=spark, lake=lake, dataset=ACTIVITY, source_dir=src_dir
     ).maintain(act_job.max_day())
     ImportJob(
-        spark=spark, lake=lake, dataset=FLOW, source_dir=src_dir,
-        write_perm=False,
+        spark=spark, lake=lake, dataset=FLOW, source_dir=src_dir
     ).maintain(flow_job.max_day())
     stages["maintain"] = round(time.perf_counter() - t0, 3)
 
@@ -176,10 +175,7 @@ def main() -> None:
     base_days = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     ratio = int(sys.argv[2]) if len(sys.argv) > 2 else 10
 
-    from bench import scaling_violations
-
-    spark = get_spark("bench-pipeline")
-    spark.range(1000).selectExpr("sum(id)").collect()
+    spark = warm_session("bench-pipeline")
     record: dict = {
         "act_rows_per_day": ACT_ROWS_PER_DAY,
         "flow_rows_per_day": FLOWS_PER_DAY * 3,

@@ -27,17 +27,16 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from fxa_activity_metrics_spark.session import get_spark  # noqa: E402
-from fxa_activity_metrics_spark import cacheutil  # noqa: E402
 
 from bench import (  # noqa: E402
     BENCH_QUERIES,
     PAIR_VERIFY_DATA_BORNE,
     QUADRATIC_BASELINES,
+    scaling_violations,
+    timed_runs,
+    warm_session,
 )
 
 # Replica-clique outputs: make_scaled_sf gives every doc/blob
@@ -88,19 +87,13 @@ def main() -> None:
     from fxa_activity_metrics_spark.operators import similarity
     from fxa_activity_metrics_spark.sources.testdata import read_table
 
-    spark = get_spark("bench-sf10")
+    spark = warm_session("bench-sf10")
     qs = em.all_queries()
-    spark.range(1000).selectExpr("sum(id)").collect()
     names = [q for q in BENCH_QUERIES if q not in EXCLUDED]
     timings: dict[str, float] = {}
     for name in names:
-        per = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            per.append(time.perf_counter() - t0)
-            cacheutil.release_all()
-        timings[name] = round(min(per), 3)
+        runs = timed_runs(spark, name, lambda: qs[name](spark, sf_dir), 2)
+        timings[name] = round(min(w for _, w, _ in runs), 3)
         print(f"{name}: {timings[name]}", file=sys.stderr)
 
     # the semantic-dedup SCALE configuration: n_cells grows LINEARLY
@@ -117,15 +110,13 @@ def main() -> None:
         cents = similarity.ivf_centroids(
             read_table(spark, d, "embeddings"), n_cells=max(16, n // 800)
         )
-        per = []
-        for _ in range(2):
-            t0 = time.perf_counter()
-            similarity.semantic_dedup(
-                emb_d, threshold=0.3, centroids=cents
-            ).write.format("noop").mode("overwrite").save()
-            per.append(time.perf_counter() - t0)
-            cacheutil.release_all()
-        return round(min(per), 3)
+        runs = timed_runs(
+            spark,
+            "semantic_dedup_scaled",
+            lambda: similarity.semantic_dedup(emb_d, threshold=0.3, centroids=cents),
+            2,
+        )
+        return round(min(w for _, w, _ in runs), 3)
 
     timings["semantic_dedup_scaled"] = _scaled_semantic(sf_dir)
     print(f"semantic_dedup_scaled: {timings['semantic_dedup_scaled']}",
@@ -145,8 +136,6 @@ def main() -> None:
     # row (n_cells grows with the corpus by design), so the gate
     # skips it; its sf1-vs-sf10 trend is documented in
     # ENGINEERING_NOTES.md.
-    from bench import scaling_violations
-
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(root, "BENCH_LOCAL.json")) as f:
         base01 = json.load(f)["queries"]

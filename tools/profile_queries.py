@@ -1,10 +1,14 @@
-"""Per-query empirical profiler (optimization guide §1/§7).
+"""Per-query empirical profiler and A/B timer (optimization guide §1/§7).
 
-For each named query, runs the noop-sink write in its own job group
-with the Spark UI's REST API enabled, then pulls per-stage metrics
-(executor run time, shuffle read/write bytes, task counts) so wall
-clock can be decomposed into scheduling floor vs executor compute vs
-shuffle. Prints one line per query plus a JSON dump.
+For each named query, times three runs through bench.timed_runs (noop
+sink, one job group per run) and prints the best wall time, its build
+time and every run's wall time. It then reads the best run's jobs and
+stages from Spark's in-process status stores, which work with the UI
+off (status tracker: group → jobs → stage ids; the app status store:
+per-stage executor run time, shuffle read/write bytes, input bytes,
+task counts), so wall clock can be decomposed into scheduling floor vs
+executor compute vs shuffle. Prints one line per query plus a JSON
+dump.
 
 Usage: python tools/profile_queries.py [sf_dir] [query ...]
 Defaults: sf0.1, the 30 slowest queries from BENCH_LOCAL.json.
@@ -15,103 +19,79 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-import urllib.request
+
+from py4j.protocol import Py4JJavaError
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from fxa_activity_metrics_spark.session import get_spark  # noqa: E402
-from fxa_activity_metrics_spark import cacheutil  # noqa: E402
+from bench import timed_runs, warm_session  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-UI_PORT = int(os.environ.get("SPARK_GRAFT_PROFILE_PORT", "4055"))
 
 
-def _get(path: str):
-    with urllib.request.urlopen(f"http://localhost:{UI_PORT}/api/v1{path}") as r:
-        return json.loads(r.read())
+def group_stages(sc, group: str) -> tuple[int, int, list]:
+    """(job count, stage count, finished stages) of one job group, from
+    the status tracker and the app status store."""
+    tracker = sc.statusTracker()
+    jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+    stage_ids = sorted({s for j in jobs if j for s in j.stageIds})
+    store = sc._jsc.sc().statusStore()
+    stages = []
+    for sid in stage_ids:
+        try:
+            st = store.lastStageAttempt(sid)
+        except Py4JJavaError:  # not in the store (evicted or not yet recorded)
+            continue
+        if st.status().toString() in ("COMPLETE", "SKIPPED"):
+            stages.append(st)
+    return len(jobs), len(stage_ids), stages
 
 
 def main() -> None:
     import __spark_entry__ as entrymod
 
-    spark = get_spark(
-        "fxa-profile",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            "spark.ui.port": str(UI_PORT),
-            "spark.appStatusStore.diskStoreDir": "",
-        },
-    )
+    args = sys.argv[1:]
+    sf_dir = "/root/testdata/sf0.1"
+    if args and os.path.isdir(args[0]):
+        sf_dir, args = args[0], args[1:]
+    spark = warm_session("fxa-profile")
+    sc = spark.sparkContext
     qs = entrymod.all_queries()
-    if len(sys.argv) > 2:
-        names = sys.argv[2:]
+    if args:
+        names = args
     else:
         with open(os.path.join(REPO, "BENCH_LOCAL.json")) as f:
             bench = json.load(f)
         names = sorted(bench["queries"], key=bench["queries"].get, reverse=True)[:30]
 
-    app_id = spark.sparkContext.applicationId
-    spark.range(1000).selectExpr("sum(id)").collect()  # warmup
-
     results = {}
     for name in names:
-        fn = qs[name]
-        sc = spark.sparkContext
-        best = None
-        for run in range(3):
-            sc.setJobGroup(f"prof-{name}-{run}", name)
-            t0 = time.perf_counter()
-            df = fn(spark, SF_DIR)
-            t_build = time.perf_counter() - t0
-            df.write.format("noop").mode("overwrite").save()
-            t_total = time.perf_counter() - t0
-            cacheutil.release_all()
-            sc.setJobGroup(None, None)
-            if best is None or t_total < best[0]:
-                best = (t_total, t_build, f"prof-{name}-{run}")
-        t_total, t_build, group = best
-
-        jobs = [j for j in _get(f"/applications/{app_id}/jobs")
-                if j.get("jobGroup") == group]
-        stage_ids = sorted({s for j in jobs for s in j["stageIds"]})
-        run_ms = sh_read = sh_write = n_tasks = inp = 0
-        max_stage = ("", 0)
-        for sid in stage_ids:
-            try:
-                infos = _get(f"/applications/{app_id}/stages/{sid}")
-            except Exception:
-                continue
-            for st in infos:
-                if st["status"] not in ("COMPLETE", "SKIPPED"):
-                    continue
-                run_ms += st.get("executorRunTime", 0)
-                sh_read += st.get("shuffleReadBytes", 0)
-                sh_write += st.get("shuffleWriteBytes", 0)
-                inp += st.get("inputBytes", 0)
-                n_tasks += st.get("numCompleteTasks", 0)
-                if st.get("executorRunTime", 0) > max_stage[1]:
-                    max_stage = (st.get("name", "")[:40], st["executorRunTime"])
+        runs = timed_runs(spark, name, lambda: qs[name](spark, sf_dir), 3)
+        t_build, t_total, group = min(runs, key=lambda r: r[1])
+        n_jobs, n_stages, stages = group_stages(sc, group)
+        run_ms = sum(st.executorRunTime() for st in stages)
+        top = max(stages, key=lambda st: st.executorRunTime(), default=None)
         results[name] = {
             "wall": round(t_total, 3),
             "build": round(t_build, 3),
-            "jobs": len(jobs),
-            "stages": len(stage_ids),
-            "tasks": n_tasks,
+            "runs": [round(w, 3) for _, w, _ in runs],
+            "jobs": n_jobs,
+            "stages": n_stages,
+            "tasks": sum(st.numCompleteTasks() for st in stages),
             "exec_run_s": round(run_ms / 1000.0, 2),
-            "input_mb": round(inp / 1e6, 1),
-            "shuf_r_mb": round(sh_read / 1e6, 2),
-            "shuf_w_mb": round(sh_write / 1e6, 2),
-            "max_stage": max_stage[0],
-            "max_stage_s": round(max_stage[1] / 1000.0, 2),
+            "input_mb": round(sum(st.inputBytes() for st in stages) / 1e6, 1),
+            "shuf_r_mb": round(sum(st.shuffleReadBytes() for st in stages) / 1e6, 2),
+            "shuf_w_mb": round(sum(st.shuffleWriteBytes() for st in stages) / 1e6, 2),
+            "max_stage": top.name()[:40] if top else "",
+            "max_stage_s": round(top.executorRunTime() / 1000.0, 2) if top else 0.0,
         }
         r = results[name]
         print(
             f"{name:<30} wall={r['wall']:6.2f} build={r['build']:5.2f} "
             f"jobs={r['jobs']:>3} stages={r['stages']:>3} tasks={r['tasks']:>5} "
             f"execsum={r['exec_run_s']:7.2f}s shufR={r['shuf_r_mb']:7.2f}MB "
-            f"top[{r['max_stage_s']:5.1f}s]={r['max_stage']}",
+            f"top[{r['max_stage_s']:5.1f}s]={r['max_stage']} "
+            f"runs={[round(w, 2) for w in r['runs']]}",
             flush=True,
         )
 

@@ -14,17 +14,16 @@ import datetime as dt
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import timed_runs, warm_session  # noqa: E402
 from fxa_activity_metrics_spark.operators.summaries import (  # noqa: E402
     multi_device_users_join,
     multi_device_users_join_salted,
 )
-from fxa_activity_metrics_spark.session import get_spark  # noqa: E402
 
 
 def skewed_activity(spark, n_rows: int, hot_share: float = 0.10):
@@ -56,73 +55,48 @@ def skewed_activity(spark, n_rows: int, hot_share: float = 0.10):
     return hot.unionByName(bg).repartition(32).cache()
 
 
-def timed(fn, runs: int = 2) -> float:
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        fn().write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
-
-
 def main() -> None:
     n_rows = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
-    spark = get_spark("skew-bench")
+    spark = warm_session("skew-bench")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     act = skewed_activity(spark, n_rows)
     act.count()  # materialize the cache
 
-    def with_aqe(enabled: bool, skew: bool, fn):
-        def run():
-            spark.conf.set("spark.sql.adaptive.enabled", str(enabled).lower())
-            spark.conf.set(
-                "spark.sql.adaptive.skewJoin.enabled", str(skew).lower()
-            )
-            # make the skew detector fire on this dataset's scale
-            spark.conf.set(
-                "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8m"
-            )
-            spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-            try:
-                return fn()
-            finally:
-                spark.conf.set("spark.sql.adaptive.enabled", "true")
-                spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+    def timed(label: str, aqe: bool, skew: bool, build) -> float:
+        """Min of 2 runs with AQE and its skew-join split set as given.
+        The settings hold for the whole run: Spark reads them when the
+        noop write is planned, not when the frame is built."""
+        spark.conf.set("spark.sql.adaptive.enabled", str(aqe).lower())
+        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", str(skew).lower())
+        # make the skew detector fire on this dataset's scale
+        spark.conf.set(
+            "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8m"
+        )
+        spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
+        try:
+            runs = timed_runs(spark, label, build, 2)
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", "true")
+            spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+        return round(min(w for _, w, _ in runs), 3)
 
-        return run
-
+    hot_min_rows = max(1000, n_rows // 100)
     results = {
-        "plain_no_aqe": timed(
-            with_aqe(False, False, lambda: multi_device_users_join(act, 7))
-        ),
-        "plain_aqe_skewjoin": timed(
-            with_aqe(True, True, lambda: multi_device_users_join(act, 7))
-        ),
-        "full_salt": timed(
-            with_aqe(
-                True,
-                False,
-                lambda: multi_device_users_join_salted(act, 7, n_salts=8),
-            )
-        ),
-        "partial_salt": timed(
-            with_aqe(
-                True,
-                False,
-                lambda: multi_device_users_join_salted(
-                    act, 7, n_salts=8, hot_min_rows=max(1000, n_rows // 100)
-                ),
-            )
-        ),
-        "partial_salt_plus_aqe": timed(
-            with_aqe(
-                True,
-                True,
-                lambda: multi_device_users_join_salted(
-                    act, 7, n_salts=8, hot_min_rows=max(1000, n_rows // 100)
-                ),
-            )
-        ),
+        name: timed(name, aqe, skew, build)
+        for name, aqe, skew, build in [
+            ("plain_no_aqe", False, False,
+             lambda: multi_device_users_join(act, 7)),
+            ("plain_aqe_skewjoin", True, True,
+             lambda: multi_device_users_join(act, 7)),
+            ("full_salt", True, False,
+             lambda: multi_device_users_join_salted(act, 7, n_salts=8)),
+            ("partial_salt", True, False,
+             lambda: multi_device_users_join_salted(
+                 act, 7, n_salts=8, hot_min_rows=hot_min_rows)),
+            ("partial_salt_plus_aqe", True, True,
+             lambda: multi_device_users_join_salted(
+                 act, 7, n_salts=8, hot_min_rows=hot_min_rows)),
+        ]
     }
     print(
         json.dumps(
