@@ -22,7 +22,7 @@ import datetime as dt
 import os
 import re
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,7 +33,7 @@ from fxa_activity_metrics_spark.operators import flows as flow_ops
 from fxa_activity_metrics_spark.operators.activity import typed_day_events
 from fxa_activity_metrics_spark.schemas import SAMPLE_RATES, Dataset
 from fxa_activity_metrics_spark.sources.csv import read_day_csv
-from fxa_activity_metrics_spark.sources.lake import Lake, _add_months
+from fxa_activity_metrics_spark.sources.lake import Lake, ZOrder, _add_months, zorder_bounds
 
 _DAY_RE = re.compile(r"(\d{4}-\d{2}-\d{2})\.\w+$")
 
@@ -69,6 +69,9 @@ class ImportJob:
     # control-event-consumed by the hook); without one the typed day
     # is written as is.
     after_day: Callable[["ImportJob", dt.date, DataFrame, str, int], None] | None = None
+    # the landed day's clustering, set by import_day: one set of
+    # boundaries shared by every sampled variant of that day
+    zorder: ZOrder | None = field(default=None, init=False, repr=False)
 
     def table(self, suffix: str) -> str:
         return self.dataset.name + suffix
@@ -109,7 +112,14 @@ class ImportJob:
 
     def import_day(self, day: dt.date, path: str, max_day: dt.date) -> None:
         """One day-file → three sampled lake variants (S5). The cached
-        day file is released once every variant is written."""
+        day file is released once every variant is written.
+
+        A dataset with ``zorder_cols`` lands each variant clustered
+        (the reference keeps a landed day fast to scan through its
+        SORTKEY/DISTKEY, import_events.py:62): the boundaries are
+        computed once, from the whole typed day, and reused by all
+        three variants — the 10% and 50% cohorts are id-prefix subsets
+        spread across the same key domain."""
         with cacheutil.scope():
             raw = read_day_csv(
                 self.spark,
@@ -117,6 +127,11 @@ class ImportJob:
                 self.dataset.csv_schema,
                 max_lengths=self.dataset.max_lengths,
             )
+            self.zorder = zorder_bounds(
+                typed_day_events(raw, day, id_column=self.dataset.id_column, percent=100),
+                self.dataset.zorder_cols,
+                where=f"{self.dataset.name} day={day}",
+            ) if self.dataset.zorder_cols else None
             for suffix, percent, months in SAMPLE_RATES:
                 if self.after_day:
                     self.after_day(self, day, raw, suffix, percent)
@@ -129,30 +144,36 @@ class ImportJob:
                     retention_cutoff=_add_months(max_day, -months),
                     columns=[f.name for f in self.dataset.lake_schema.fields if f.name != "day"],
                 )
-                self.lake.write_days(self.table(suffix), typed)
+                self.write_variant(suffix, typed)
+
+    def write_variant(self, suffix: str, df: DataFrame) -> None:
+        """Write one sampled variant of the landed day (S5) — the one
+        sink of every variant table, the flow hook's perm write
+        included — clustered on the day's boundaries when the dataset
+        has clustering keys."""
+        self.lake.write_days(self.table(suffix), df, zorder=self.zorder)
 
     def expire(self, max_day: dt.date) -> None:
         """S6 + S7: retention expiry then compaction, per variant."""
         for suffix, _percent, months in SAMPLE_RATES:
             self.lake.expire(self.table(suffix), max_day, months)
 
-    def maintain(self, max_day: dt.date) -> None:
-        """S7 at pipeline cadence: z-order CLOSED day partitions on
-        the dataset's clustering keys (the reference's SORTKEY/DISTKEY
-        pair, schemas.py) so uid/flow_id point lookups and composite
-        time-slices prune row groups. Only days strictly older than
-        max_day are clustered — the newest day stays inside the 1-day
-        grace window and may still be rewritten; once a newer day
-        lands, the next run picks it up. Per-partition _CLUSTERED
-        markers make re-runs no-ops (Lake.maintain)."""
+    def maintain(self) -> None:
+        """S7 at pipeline cadence: the clustering sweep over every
+        variant table on the dataset's clustering keys (the
+        reference's SORTKEY/DISTKEY pair, schemas.py), so uid/flow_id
+        point lookups and composite time-slices prune row groups.
+        Days imported by ``import_day`` land clustered and marked, so
+        this is one marker check per day; it rewrites only days
+        written without clustering (lakes written by older code).
+        The newest day does not wait: no later import rewrites a
+        landed partition of these tables — the flow hook only reads
+        day+1, expiry drops whole directories, and a (force-)re-import
+        re-clusters the day it rewrites (Lake.maintain)."""
         if not self.dataset.zorder_cols:
             return
         for suffix, _percent, _months in SAMPLE_RATES:
-            self.lake.maintain(
-                self.table(suffix),
-                list(self.dataset.zorder_cols),
-                before_day=max_day,
-            )
+            self.lake.maintain(self.table(suffix), list(self.dataset.zorder_cols))
 
     def run(self) -> list[dt.date]:
         """The full pipeline (import_events.py:238-258). Returns the
@@ -165,7 +186,7 @@ class ImportJob:
             processed.append(day)
         if max_day:
             self.expire(max_day)
-            self.maintain(max_day)
+            self.maintain()
         return processed
 
 
@@ -301,7 +322,7 @@ def flow_after_day(job: ImportJob, day: dt.date, raw: DataFrame, suffix: str, pe
 
     # 4. perm flow_events for this day, control events consumed
     perm = staging_day.filter(~flow_ops.consumed_condition()).select(*perm_cols)
-    lake.write_days(f"flow_events{suffix}", perm)
+    job.write_variant(suffix, perm)
 
 
 def run_counts_import(

@@ -228,10 +228,11 @@ class Dataset:
     # string-length caps from the reference VARCHAR(n) DDL, applied on
     # load to emulate Redshift TRUNCATECOLUMNS (import_events.py:96)
     max_lengths: dict[str, int] = field(default_factory=dict)
-    # clustering keys for scheduled maintenance (Lake.maintain): the
-    # Spark-side analogue of the reference's SORTKEY/DISTKEY pair —
-    # closed day partitions are z-ordered on these so point lookups
-    # and composite scans prune row groups (ZORDER_ACTIVITY_SKIP.json)
+    # clustering keys: the Spark-side analogue of the reference's
+    # SORTKEY/DISTKEY pair — every day partition is z-ordered on these
+    # as it lands (ImportJob.import_day), so point lookups and
+    # composite scans prune row groups (ZORDER_ACTIVITY_SKIP.json);
+    # Lake.maintain sweeps days written without clustering
     zorder_cols: tuple[str, ...] | None = None
 
 

@@ -21,26 +21,137 @@ more partitions than the operation touches.
 from __future__ import annotations
 
 import datetime as dt
+import math
 import os
 import re
 import shutil
 import warnings
+from collections.abc import Sequence
+from dataclasses import dataclass
 
+from pyspark.ml.feature import Bucketizer
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# per-partition idempotence marker of the clustered layout
+# (underscore-prefixed: invisible to every parquet reader, the
+# _SUCCESS convention); holds the comma-joined clustering columns
+_CLUSTERED = "_CLUSTERED"
 
-def _bucket_index(col_name: str, bnds: list[float]):
-    """Equi-depth bucket index of ``col_name`` against sorted
-    boundaries: #boundaries <= value, as a JVM fold over a literal
-    array. NULL comparisons fall to the otherwise(0) branch, so NULLs
-    land in bucket 0."""
-    return F.aggregate(
-        F.lit(bnds),
-        F.lit(0).cast("long"),
-        lambda acc, b: acc + F.when(F.col(col_name) >= b, 1).otherwise(0),
+
+@dataclass(frozen=True)
+class ZOrder:
+    """The z-order clustering of one directory or one landed day: the
+    clustering columns and, per column, its equi-depth surrogate
+    boundaries — ``None`` for an entirely-NULL column, whose dimension
+    is skipped. Built by ``zorder_bounds``; applied by
+    ``Lake.write_days(..., zorder=...)`` and the ``_zorder_dir``
+    rewrite (see ``Lake.optimize_zorder`` for the layout)."""
+
+    cols: tuple[str, ...]
+    bounds: tuple[tuple[float, ...] | None, ...]
+    bits: int = 8
+
+
+def zorder_bounds(df: DataFrame, cols: Sequence[str], bits: int = 8, where: str = "") -> ZOrder:
+    """Equi-depth boundaries of every clustering column's surrogate,
+    from ONE ``approxQuantile`` job over all columns (2^bits bins,
+    relative error 1/2^(bits+2)). A column that is entirely NULL
+    (reachable since per-partition rewrites scan single days) yields
+    no boundaries: its dimension is skipped with a warning — every row
+    would be bucket 0 anyway, contributing constant 0 bits."""
+    n_bins = 1 << bits
+    probs = [i / n_bins for i in range(1, n_bins)]
+    sur = df.select(
+        *[Lake._zorder_surrogate(c, df.schema[c].dataType).alias(f"_zs{d}")
+          for d, c in enumerate(cols)]
     )
+    quantiles = sur.stat.approxQuantile(list(sur.columns), probs, 1.0 / (4 * n_bins))
+    for c, qs in zip(cols, quantiles):
+        if not qs:
+            warnings.warn(
+                f"optimize_zorder: column {c!r} is entirely NULL "
+                f"under {where!r}; skipping that dimension",
+                stacklevel=2,
+            )
+    return ZOrder(tuple(cols), tuple(tuple(qs) or None for qs in quantiles), bits)
+
+
+def _bucket_ids(df: DataFrame, bounds: dict[str, Sequence[float]]) -> DataFrame:
+    """``df`` plus a long ``{c}_idx`` per entry of ``bounds``: the
+    equi-depth bucket of double column ``c`` — the number of distinct
+    boundaries <= its value, NULL in bucket 0. Repeated boundaries
+    (heavy hitters repeat a quantile) count once.
+
+    One binary search per value (``Bucketizer`` over
+    ``[-inf, *finite bounds, +inf]``, a codegen'd JVM call), not a
+    fold over the boundary list: a fold is a higher-order function,
+    which runs interpreted, and CollapseProject inlines an expensive
+    input (the string surrogate) into its lambda — 255 evaluations of
+    the surrogate per row at 8 bits. The fold's edge cases are kept
+    explicitly: NaN ranks above every boundary (Spark orders NaN
+    highest), so the search's extra NaN bucket is clamped to the top;
+    a -inf boundary counts for every non-NULL value, a +inf boundary
+    only for +inf and NaN; -0.0 is normalized to 0.0 (the search
+    orders it below 0.0, SQL compares them equal)."""
+    splits, cols, extra = [], [], {}
+    for c, bnds in bounds.items():
+        bnds = sorted({b + 0.0 for b in bnds})
+        finite = [b for b in bnds if math.isfinite(b)]
+        s = F.col(c)
+        if finite:
+            splits.append([-math.inf, *finite, math.inf])
+            cols.append(c)
+            bk = F.col(f"{c}_bkt")
+            idx = F.when(bk > len(finite), len(finite)).otherwise(bk)
+        else:
+            idx = F.when(s.isNotNull(), F.lit(0.0))
+        if bnds and bnds[0] == -math.inf:
+            idx = idx + 1
+        if bnds and bnds[-1] == math.inf:
+            idx = idx + F.when(s >= math.inf, 1).otherwise(0)
+        extra[f"{c}_idx"] = F.coalesce(idx.cast("long"), F.lit(0).cast("long"))
+    work = df.withColumns({c: F.col(c) + 0.0 for c in cols})
+    if cols:
+        work = Bucketizer(
+            splitsArray=splits,
+            inputCols=cols,
+            outputCols=[f"{c}_bkt" for c in cols],
+            handleInvalid="keep",
+        ).transform(work)
+    return work.select(*df.columns, *[v.alias(k) for k, v in extra.items()])
+
+
+def _zorder_frame(df: DataFrame, zo: ZOrder) -> DataFrame:
+    """``df`` plus its Morton z-value ``_z``: each live dimension's
+    surrogate is computed once per row, bucketed (``_bucket_ids``),
+    and the bucket ids' low ``bits`` bits interleaved into one long.
+    The bucket ids are materialized behind a projection boundary (each
+    is referenced ``bits`` times in the z-value, which blocks
+    CollapseProject), so the binary search runs once per row."""
+    ndims = len(zo.cols)
+    live = [d for d, b in enumerate(zo.bounds) if b]
+    work = df.select(
+        "*",
+        *[Lake._zorder_surrogate(zo.cols[d], df.schema[zo.cols[d]].dataType).alias(f"_zs{d}")
+          for d in live],
+    )
+    work = _bucket_ids(work, {f"_zs{d}": zo.bounds[d] for d in live})
+    z = F.lit(0).cast("long")
+    for d in live:
+        idx = F.col(f"_zs{d}_idx")
+        for bit in range(zo.bits):
+            z = z + F.shiftleft(
+                F.shiftright(idx, bit).bitwiseAND(F.lit(1)),
+                bit * ndims + (ndims - 1 - d),
+            )
+    return work.select(*df.columns, z.alias("_z"))
+
+
+def _mark_clustered(part: str, cols: Sequence[str]) -> None:
+    with open(os.path.join(part, _CLUSTERED), "w") as fh:
+        fh.write(",".join(cols))
 
 
 def _hidden_sibling(path: str, suffix: str) -> str:
@@ -118,6 +229,9 @@ class Lake:
             # Leading with part_col satisfies the writer's required
             # ordering, so OUR sort is the one that reaches the files.
             out = out.sortWithinPartitions(part_col, *sort_cols)
+        self._overwrite_parts(table, out, part_col)
+
+    def _overwrite_parts(self, table: str, out: DataFrame, part_col: str) -> None:
         (
             out.write.mode("overwrite")
             .partitionBy(part_col)
@@ -125,7 +239,13 @@ class Lake:
             .parquet(self.path(table))
         )
 
-    def write_days(self, table: str, df: DataFrame, sort_cols: list[str] | None = None) -> None:
+    def write_days(
+        self,
+        table: str,
+        df: DataFrame,
+        sort_cols: list[str] | None = None,
+        zorder: ZOrder | None = None,
+    ) -> None:
         """Idempotent day sink (S5).
 
         Dynamic partition overwrite replaces exactly the day
@@ -134,11 +254,35 @@ class Lake:
         contract (import_events.py:102-105,205-219). Rows are sorted
         within partitions on ``sort_cols`` (default: timestamp) so
         Parquet zone maps stay effective (SORTKEY analogue).
+
+        With ``zorder`` (the day's boundaries from ``zorder_bounds``)
+        the day is written CLUSTERED instead: range-partitioned on
+        (day, z-value) into the file count ``maintain`` writes and
+        sorted on it, then each written day gets its ``_CLUSTERED``
+        marker — the layout ``maintain`` would produce, without the
+        read-back and rewrite. The written days are found from the
+        directory listing, with no probe job: the dynamic-overwrite
+        commit replaces each written partition by renaming its staged
+        directory into place, so exactly the written days have a new
+        inode, and a day the frame does not touch keeps its files and
+        its marker state.
         """
         if "day" not in df.columns:
             raise ValueError("write_days requires a 'day' partition column")
-        sort_cols = sort_cols or (["timestamp"] if "timestamp" in df.columns else [])
-        self.write_parts(table, df, "day", sort_cols)
+        if zorder is None:
+            sort_cols = sort_cols or (["timestamp"] if "timestamp" in df.columns else [])
+            self.write_parts(table, df, "day", sort_cols)
+            return
+        before = self._day_inodes(table)
+        self._overwrite_parts(table, self._cluster(df, zorder, lead=["day"]), "day")
+        for part, ino in self._day_inodes(table).items():
+            if before.get(part) != ino:
+                _mark_clustered(part, zorder.cols)
+
+    def _day_inodes(self, table: str) -> dict[str, int]:
+        """Each day partition directory's inode."""
+        parts = (os.path.join(self.path(table), f"day={d.isoformat()}") for d in self.days(table))
+        return {p: os.stat(p).st_ino for p in parts}
 
     def overwrite(self, table: str, df: DataFrame) -> None:
         """Full-table overwrite (session/entity tables like
@@ -453,10 +597,12 @@ class Lake:
 
         Mechanics, all JVM-side: each clustering column is rank-
         bucketed into 2^bits equi-depth bins against approxQuantile
-        boundaries (equi-depth, so skewed columns still spread across
-        buckets; the boundary list is ≤2^bits driver-side doubles — a
-        bounded collect, never corpus-scale), the bucket indexes'
-        bits are interleaved into one long, and the table is range-
+        boundaries (``zorder_bounds``: one job for all columns;
+        equi-depth, so skewed columns still spread across buckets; the
+        boundary list is ≤2^bits driver-side doubles — a bounded
+        collect, never corpus-scale) by one binary search per value
+        (``_bucket_ids``), the bucket indexes' bits are interleaved
+        into one long, and the table is range-
         partitioned + sorted by it in a single exchange, then swapped
         in with the crash-safe trash rotation (``_swap_dir`` — live
         rotated aside before the promote, so no window with no live
@@ -528,26 +674,25 @@ class Lake:
         zorder_cols: list[str],
         bits: int = 8,
         n_files: int | None = None,
-        before_day: dt.date | None = None,
     ) -> list[dt.date]:
-        """The SCHEDULED clustering path (S7 at pipeline cadence):
-        z-order every CLOSED day partition exactly once. A partition
-        is closed when it can no longer be rewritten — the caller
-        passes ``before_day`` (typically the dataset's max_day, so the
-        newest day, still inside the reference's 1-day grace window,
-        is left alone until a newer day lands).
+        """The clustering SWEEP (S7 at pipeline cadence): z-order every
+        day partition that lacks a ``_CLUSTERED`` marker, exactly once.
 
-        Idempotence is a per-partition ``_CLUSTERED`` marker file
-        (underscore-prefixed: invisible to every parquet reader, the
-        _SUCCESS convention), written AFTER the crash-safe swap — a
-        crash between rewrite and marker re-clusters that one day on
-        the next run, which is harmless. Any later rewrite of the
-        partition (grace-window delete_where, write_days overwrite,
-        compact) replaces the directory and with it the marker, so a
-        rewritten day is automatically re-clustered on the next
-        maintenance pass. Each day is an independent bounded rewrite —
-        the unit of maintenance at 100 TB, embarrassingly parallel
-        across a cluster.
+        Days imported through ``write_days(..., zorder=...)`` land
+        clustered and marked, so on a lake written that way this is
+        one ``os.path.exists`` per day. It rewrites the days written
+        without clustering: lakes written by older code (which
+        clustered only after the day had landed), and partitions
+        replaced since by an unclustered rewrite (``delete_where``,
+        ``compact``, a plain ``write_days``) — any such rewrite
+        replaces the directory and with it the marker, so the day is
+        re-clustered on the next sweep.
+
+        The marker is written AFTER the crash-safe swap: a crash
+        between rewrite and marker re-clusters that one day on the
+        next run, which is harmless. Each day is an independent
+        bounded rewrite — the unit of maintenance at 100 TB,
+        embarrassingly parallel across a cluster.
 
         Returns the days clustered this call.
         """
@@ -559,15 +704,11 @@ class Lake:
             )
         done: list[dt.date] = []
         for day in self.days(table):
-            if before_day is not None and day >= before_day:
-                continue
             part = os.path.join(self.path(table), f"day={day.isoformat()}")
-            marker = os.path.join(part, "_CLUSTERED")
-            if os.path.exists(marker):
+            if os.path.exists(os.path.join(part, _CLUSTERED)):
                 continue
             self._zorder_dir(part, zorder_cols, bits, n_files)
-            with open(marker, "w") as fh:
-                fh.write(",".join(zorder_cols))
+            _mark_clustered(part, zorder_cols)
             done.append(day)
         return done
 
@@ -608,79 +749,36 @@ class Lake:
         self, path: str, cols: list[str], bits: int, n_files: int | None
     ) -> None:
         """One-directory z-order rewrite (the whole table, or one
-        partition of a partitioned table)."""
+        partition of a partitioned table): boundaries, then the
+        clustered frame, written aside and swapped in."""
         df = self.spark.read.parquet(path)
-        surrogates = {
-            c: self._zorder_surrogate(c, df.schema[c].dataType) for c in cols
-        }
-        work = df
-        for d, c in enumerate(cols):
-            work = work.withColumn(f"_zs{d}", surrogates[c])
-        n_bins = 1 << bits
-        probs = [i / n_bins for i in range(1, n_bins)]
-        ndims = len(cols)
-        live_bnds: dict[int, list[float]] = {}
-        for d, c in enumerate(cols):
-            # equi-depth boundaries; dedupe (heavy hitters repeat a
-            # boundary) while keeping order so the fold stays monotone
-            raw = work.stat.approxQuantile(f"_zs{d}", probs, 1.0 / (4 * n_bins))
-            bnds: list[float] = []
-            for b in raw:
-                if not bnds or b > bnds[-1]:
-                    bnds.append(b)
-            if not bnds:
-                # approxQuantile returns [] when the column is entirely
-                # NULL in this directory (reachable since per-partition
-                # rewrites scan single days): folding over an empty
-                # literal array is degenerate, so skip the dimension —
-                # every row is bucket 0 anyway, contributing constant
-                # 0 bits.
-                warnings.warn(
-                    f"optimize_zorder: column {c!r} is entirely NULL "
-                    f"under {path!r}; skipping that dimension",
-                    stacklevel=2,
-                )
-                continue
-            live_bnds[d] = bnds
-        # Bucket indexes are MATERIALIZED behind a projection boundary
-        # (expensive fold, referenced ``bits`` times in the z-value —
-        # which blocks CollapseProject): higher-order folds run
-        # interpreted with no cross-reference subexpression sharing,
-        # so inlining idx would re-run the boundary fold per bit.
-        # The fold lambda must be EXACTLY 2-arg — pyspark derives the
-        # HOF arity from the Python signature — so the column name is
-        # bound via a factory closure, not a default arg.
-        work = work.select(
-            "*",
-            *[
-                _bucket_index(f"_zs{d}", bnds).alias(f"_idx{d}")
-                for d, bnds in live_bnds.items()
-            ],
-        )
-        z = F.lit(0).cast("long")
-        for d in live_bnds:
-            idx = F.col(f"_idx{d}")
-            for bit in range(bits):
-                z = z + F.shiftleft(
-                    F.shiftright(idx, bit).bitwiseAND(F.lit(1)),
-                    bit * ndims + (ndims - 1 - d),
-                )
-        n = n_files or max(
-            1, int(self.spark.conf.get("spark.sql.shuffle.partitions", "32")) // 4
-        )
-        out = (
-            work.withColumn("_z", z)
-            .repartitionByRange(n, "_z")
-            .sortWithinPartitions("_z")
-            .drop(
-                "_z",
-                *[f"_zs{d}" for d in range(ndims)],
-                *[f"_idx{d}" for d in live_bnds],
-            )
-        )
+        out = self._cluster(df, zorder_bounds(df, cols, bits, where=path), n_files)
         tmp = _hidden_sibling(path, "._zorder")
         out.write.mode("overwrite").parquet(tmp)
         _swap_dir(path, tmp)
+
+    def _cluster(
+        self,
+        df: DataFrame,
+        zo: ZOrder,
+        n_files: int | None = None,
+        lead: list[str] | None = None,
+    ) -> DataFrame:
+        """``df`` range-partitioned on (``lead``, z-value) into
+        ``n_files`` partitions (default: a quarter of the shuffle
+        partitions) and sorted on the same key in a single exchange.
+        ``lead`` is the partition column of a partitioned write, which
+        must lead the sort (see ``write_parts``)."""
+        lead = lead or []
+        n = n_files or max(
+            1, int(self.spark.conf.get("spark.sql.shuffle.partitions", "32")) // 4
+        )
+        return (
+            _zorder_frame(df, zo)
+            .repartitionByRange(n, *lead, "_z")
+            .sortWithinPartitions(*lead, "_z")
+            .drop("_z")
+        )
 
     def analyze(self, table: str) -> None:
         """ANALYZE analogue (S7): compute table stats for CBO when the

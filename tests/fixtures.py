@@ -13,7 +13,11 @@ the 10% ⊂ 50% ⊂ 100% subset property directly testable
 from __future__ import annotations
 
 import datetime as dt
+import glob
+import hashlib
 import os
+
+import pyarrow.parquet as pq
 
 PAD = "e" * 57  # 7 cohort hex chars + 57 pad = 64-char id
 
@@ -72,6 +76,48 @@ def activity_rows(day: dt.date) -> list[list]:
 def write_activity_days(dirpath: str, days: list[dt.date]) -> None:
     for day in days:
         write_csv(dirpath, "activity_events", day, activity_rows(day))
+
+
+def write_hashed_activity_days(dirpath: str, days: list[dt.date], n: int = 2000) -> None:
+    """``n`` rows per day, at most 40 s apart and all inside the day,
+    with md5 (hash-shuffled) uids: an unclustered row group spans the
+    whole uid domain, so uid extents show whether a day was z-ordered."""
+    step = min(40, 86_400 // n)
+    for day in days:
+        rows = [
+            [epoch(day) + i * step, "b", "1", "os", hashlib.md5(f"u{i}".encode()).hexdigest(),
+             "login", "svc", f"d{i % 7}"]
+            for i in range(n)
+        ]
+        write_csv(dirpath, "activity_events", day, rows)
+
+
+def at_production_file_budget(spark, step) -> None:
+    """Run ``step()`` at the production shuffle-partition default. The
+    clustering file budget derives from spark.sql.shuffle.partitions
+    (//4); the test session pins 8, which yields 2 files — only the
+    leading interleave bit (timestamp's) splits, so uid extents can't
+    show."""
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        step()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prior)
+
+
+def uid_extent(part: str) -> float:
+    """Mean per-row-group uid range of one partition directory, as a
+    fraction of the hex domain (7-char prefix as a base-16 integer),
+    straight from the parquet footers."""
+    vals = []
+    for f in glob.glob(os.path.join(part, "*.parquet")):
+        pf = pq.ParquetFile(f)
+        ci = pf.schema_arrow.get_field_index("uid")
+        for rg in range(pf.metadata.num_row_groups):
+            st = pf.metadata.row_group(rg).column(ci).statistics
+            vals.append((int(st.max[:7], 16) - int(st.min[:7], 16)) / 16**7)
+    return sum(vals) / len(vals)
 
 
 # -- flows ------------------------------------------------------------------

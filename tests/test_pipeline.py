@@ -4,7 +4,9 @@ summaries — the reference's import contract replayed on the lake."""
 
 from __future__ import annotations
 
+import dataclasses
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,7 +15,13 @@ from fxa_activity_metrics_spark.operators.summaries import multi_device_users_jo
 from fxa_activity_metrics_spark.plans.incremental import ImportJob, summarize_daily
 from fxa_activity_metrics_spark.schemas import ACTIVITY
 from fxa_activity_metrics_spark.sources.lake import Lake
-from tests.fixtures import COHORTS, write_activity_days
+from tests.fixtures import (
+    COHORTS,
+    at_production_file_budget,
+    uid_extent,
+    write_activity_days,
+    write_hashed_activity_days,
+)
 
 D1 = dt.date(2024, 3, 1)
 DAYS = [D1 + dt.timedelta(days=i) for i in range(4)]
@@ -128,24 +136,18 @@ def test_partition_pruning_plan(lake):
 
 
 def test_scheduled_maintenance_clusters_closed_days(spark, lake):
-    """The pipeline itself z-orders CLOSED day partitions on the
+    """The pipeline itself z-orders every landed day partition on the
     dataset's SORTKEY/DISTKEY pair (timestamp, uid) — no tool
-    invocation: after run(), every day strictly older than max_day
-    carries a _CLUSTERED marker, the newest (grace-window) day does
-    not, and a re-run re-clusters nothing."""
-    import os
-
+    invocation: after run(), EVERY day, the newest included, carries a
+    _CLUSTERED marker written when the day landed, and a re-run
+    re-clusters nothing."""
     root = lake.path("activity_events")
-    newest = max(DAYS)
     for day in DAYS:
         marker = os.path.join(root, f"day={day.isoformat()}", "_CLUSTERED")
-        if day < newest:
-            assert os.path.exists(marker), f"{day} should be clustered"
-            assert open(marker).read() == "timestamp,uid"
-        else:
-            assert not os.path.exists(marker), "grace-window day must wait"
+        assert os.path.exists(marker), f"{day} should be clustered"
+        assert open(marker).read() == "timestamp,uid"
 
-    # readers are undisturbed by the marker and the rewrite
+    # readers are undisturbed by the marker and the clustered layout
     df = lake.read("activity_events")
     assert df.filter(F.to_date("timestamp") != F.col("day")).count() == 0
 
@@ -153,7 +155,6 @@ def test_scheduled_maintenance_clusters_closed_days(spark, lake):
     mtimes = {
         d: os.path.getmtime(os.path.join(root, f"day={d.isoformat()}", "_CLUSTERED"))
         for d in DAYS
-        if d < newest
     }
     job = ImportJob(spark=spark, lake=lake, dataset=ACTIVITY, source_dir=lake._src)
     assert job.run() == []
@@ -165,56 +166,68 @@ def test_scheduled_maintenance_clusters_closed_days(spark, lake):
 
 
 def test_maintenance_collapses_uid_extents(spark, tmp_path):
-    """The scheduled path must actually cluster: on a fixture with
+    """The landing path must actually cluster: on a fixture with
     shuffled uids, per-row-group uid extents (fraction of the hex-uid
-    domain, straight from the parquet footers) collapse for closed
-    days after run()."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-    from tests.fixtures import write_csv
-
+    domain, straight from the parquet footers) collapse for every
+    landed day after run() — the newest day included."""
     src = str(tmp_path / "src")
     days = [D1 + dt.timedelta(days=i) for i in range(2)]
-    # 2000 rows/day with hash-shuffled uids so unclustered row groups
-    # span the whole uid domain
-    import hashlib
-
-    for day in days:
-        rows = []
-        base = int(dt.datetime.combine(day, dt.time()).timestamp())
-        for i in range(2000):
-            uid = hashlib.md5(f"u{i}".encode()).hexdigest()
-            rows.append([base + i * 40, "b", "1", "os", uid, "login", "svc", f"d{i%7}"])
-        write_csv(src, "activity_events", day, rows)
+    write_hashed_activity_days(src, days)
     lk = Lake(spark, str(tmp_path / "lake"))
-    # the default clustering file budget derives from
-    # spark.sql.shuffle.partitions (//4); the test session pins 8,
-    # which yields 2 files — only the leading interleave bit
-    # (timestamp's) splits, so uid extents can't show. Use the
-    # production default for this measurement.
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    try:
-        ImportJob(spark=spark, lake=lk, dataset=ACTIVITY, source_dir=src).run()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-
-    def uid_extent(part: str) -> float:
-        vals = []
-        for f in glob.glob(os.path.join(part, "*.parquet")):
-            pf = pq.ParquetFile(f)
-            ci = pf.schema_arrow.get_field_index("uid")
-            for rg in range(pf.metadata.num_row_groups):
-                st = pf.metadata.row_group(rg).column(ci).statistics
-                vals.append((int(st.max[:7], 16) - int(st.min[:7], 16)) / 16**7)
-        return sum(vals) / len(vals)
-
+    at_production_file_budget(
+        spark, ImportJob(spark=spark, lake=lk, dataset=ACTIVITY, source_dir=src).run
+    )
     root = lk.path("activity_events")
-    closed = os.path.join(root, f"day={days[0].isoformat()}")
-    open_day = os.path.join(root, f"day={days[1].isoformat()}")
-    assert os.path.exists(os.path.join(closed, "_CLUSTERED"))
-    # 8 files over a 2-dim z-curve: uid extent ~0.59 measured vs
-    # ~1.0 for the unclustered grace-window day
-    assert uid_extent(closed) < 0.7 < 0.9 < uid_extent(open_day)
+    for day in days:
+        part = os.path.join(root, f"day={day.isoformat()}")
+        assert os.path.exists(os.path.join(part, "_CLUSTERED"))
+        # 8 files over a 2-dim z-curve: uid extent ~0.59 measured vs
+        # ~1.0 unclustered
+        assert uid_extent(part) < 0.7, (day, uid_extent(part))
+
+
+def test_force_reload_reclusters_the_day(spark, lake):
+    """A force re-import rewrites the day's partition, and the rewrite
+    lands clustered: new files, a fresh marker; the days it does not
+    touch keep theirs."""
+    root = lake.path("activity_events")
+    part = os.path.join(root, f"day={DAYS[0].isoformat()}")
+    before = set(os.listdir(part))
+    others = {
+        d: os.path.getmtime(os.path.join(root, f"day={d.isoformat()}", "_CLUSTERED"))
+        for d in DAYS[1:]
+    }
+    job = ImportJob(
+        spark=spark, lake=lake, dataset=ACTIVITY, source_dir=lake._src,
+        day_from=DAYS[0], day_until=DAYS[0], force_reload=True,
+    )
+    assert job.run() == [DAYS[0]]
+    after = set(os.listdir(part))
+    assert "_CLUSTERED" in after
+    assert {f for f in after if f.endswith(".parquet")}.isdisjoint(before)
+    for d, m in others.items():
+        assert os.path.getmtime(os.path.join(root, f"day={d.isoformat()}", "_CLUSTERED")) == m
+
+
+def test_maintain_sweeps_days_written_without_clustering(spark, tmp_path):
+    """A lake written by older code (no clustering on landing, no
+    markers) is still swept by maintain: every day, the newest
+    included, is z-ordered and marked, once."""
+    src = str(tmp_path / "src")
+    days = [D1 + dt.timedelta(days=i) for i in range(2)]
+    write_hashed_activity_days(src, days)
+    lk = Lake(spark, str(tmp_path / "lake"))
+    legacy = dataclasses.replace(ACTIVITY, zorder_cols=None)
+    ImportJob(spark=spark, lake=lk, dataset=legacy, source_dir=src).run()
+    root = lk.path("activity_events")
+    parts = [os.path.join(root, f"day={d.isoformat()}") for d in days]
+    assert not any(os.path.exists(os.path.join(p, "_CLUSTERED")) for p in parts)
+    assert all(uid_extent(p) > 0.9 for p in parts)
+
+    at_production_file_budget(
+        spark, ImportJob(spark=spark, lake=lk, dataset=ACTIVITY, source_dir=src).maintain
+    )
+    for p in parts:
+        assert open(os.path.join(p, "_CLUSTERED")).read() == "timestamp,uid"
+        assert uid_extent(p) < 0.7, (p, uid_extent(p))
+    assert lk.maintain("activity_events", ["timestamp", "uid"]) == []

@@ -411,3 +411,69 @@ def test_zorder_ignores_crash_leftover_temp_dirs(spark, tmp_path):
     assert not os.path.exists(os.path.join(stale, "junk.txt"))
     part = os.path.join(lake.path("t"), "day=2021-03-01")
     assert not any("junk" in f for f in os.listdir(part))
+
+
+# ---------------------------------------------------------------------------
+# the bucket kernel: one binary search per value, same ids as the fold
+# ---------------------------------------------------------------------------
+
+from fxa_activity_metrics_spark.sources.lake import (  # noqa: E402
+    _bucket_ids,
+    zorder_bounds,
+)
+
+INF = float("inf")
+
+
+def _fold_bucket(col: str, raw_bnds: list[float]):
+    """Test-local copy of the kernel the binary search replaced:
+    boundaries deduplicated in order, then #boundaries <= value as a
+    JVM fold over a literal array (NULL compares fall to 0)."""
+    bnds: list[float] = []
+    for b in raw_bnds:
+        if not bnds or b > bnds[-1]:
+            bnds.append(b)
+    return F.aggregate(
+        F.lit(bnds),
+        F.lit(0).cast("long"),
+        lambda acc, b: acc + F.when(F.col(col) >= b, 1).otherwise(0),
+    )
+
+
+@pytest.mark.parametrize(
+    "bnds",
+    [
+        [1.0, 2.0, 3.0],
+        [1.0, 1.0, 2.0, 2.0, 2.0, 3.0],  # heavy hitters repeat a quantile
+        [-INF, 0.0, 5.0],
+        [0.0, 5.0, INF],
+        [-INF, -INF, 2.0, INF, INF],
+        [-INF],
+        [INF],
+        [-INF, INF],
+        [7.0],
+        [-0.0, 1.0],
+    ],
+)
+def test_bucket_ids_equal_the_fold(spark, bnds):
+    """Bucket ids match the old fold on NULL, NaN, ±inf, -0.0,
+    values equal to a boundary, duplicate values and ±inf
+    boundaries."""
+    values = [None, float("nan"), INF, -INF, 0.0, -0.0, 0.5, 1.0, 1.0, 1.5,
+              2.0, 2.0, 2.5, 3.0, 4.0, 5.0, 6.0, 7.0, 1e300, -1e300]
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(values)], "i int, v double")
+    got = _bucket_ids(df, {"v": bnds}).select("i", "v_idx").collect()
+    want = df.select("i", _fold_bucket("v", bnds).alias("fold")).collect()
+    assert sorted((r.i, r.v_idx) for r in got) == sorted((r.i, r.fold) for r in want)
+
+
+def test_clustered_frame_evaluates_the_surrogate_once(spark, tmp_path):
+    """Plan pin: the clustered frame carries no higher-order fold, and
+    the string surrogate (hex of the uid) appears once — it is not
+    inlined into the bucketing or repeated per z-value bit."""
+    lake = _mk_activity(spark, str(tmp_path), n_days=1, per_day=2_000)
+    df = lake.read("t")
+    zo = zorder_bounds(df, ["timestamp", "uid"])
+    plan = lake._cluster(df, zo)._jdf.queryExecution().executedPlan().toString()
+    assert "aggregate(" not in plan
+    assert plan.count("hex(") == 1, plan

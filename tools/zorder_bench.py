@@ -113,10 +113,12 @@ def main() -> None:
     )
     # z-ordered layout
     shutil.copytree(lake.path("shuffled"), lake.path("zorder"))
+    t0 = time.perf_counter()
     lake.optimize_zorder("zorder", ["x", "y"], bits=8, n_files=64)
+    zorder_sec = round(time.perf_counter() - t0, 3)
 
     out: dict = {"n_rows": n, "box": f"{WIDTH}x{WIDTH} of {DOMAIN}^2",
-                 "layouts": {}}
+                 "zorder_rewrite_sec": zorder_sec, "layouts": {}}
     for layout in ("shuffled", "linear", "zorder"):
         p = lake.path(layout)
         out["layouts"][layout] = {
